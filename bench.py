@@ -219,12 +219,7 @@ def _crawl_over(spark, base: str, seeds, label: dict) -> dict:
     try:
         corpus = spark.read.parquet(f"{base}/corpus.parquet")
         dns = spark.read.parquet(f"{base}/dns.parquet")
-        cfg = CrawlConfig(
-            honor_robots=False,
-            # A/B lever for the round-0 membership prune (config default
-            # off — measured negative on this corpus, BENCH §3e)
-            corpus_filter=os.environ.get(
-                "SPARK_GRAFT_CORPUS_FILTER", "0") == "1")
+        cfg = CrawlConfig(honor_robots=False)
         eng = CrawlEngine(spark, cfg, f"{workdir}/crawl", corpus, dns)
         max_rounds = int(os.environ.get("SPARK_GRAFT_MAX_ROUNDS", "16"))
         t0 = time.monotonic()

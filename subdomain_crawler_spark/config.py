@@ -64,30 +64,6 @@ class CrawlConfig:
     # the bank prunes the shuffle that dominates — always on there.
     bloom_min_seen: int = 2_000_000
 
-    # corpus-membership prune for the EXPANSION round's fetch-join (J1):
-    # round 0's frontier is the ~134× SLD fan-out, so most of its hosts
-    # exist in neither the corpus nor the DNS table — an exact-no-false-
-    # negative bloom over corpus∪dns hosts routes those rows straight to
-    # the null-columns outcome (same rows a failed left join would
-    # produce), so only possible members enter the join/sort. False
-    # positives just take the join path — results are bit-identical either
-    # way. Applied only on the expansion round: later frontiers are
-    # link-derived and mostly real hosts, where the probe is pure
-    # overhead. If the corpus exceeds the capacity the bank is discarded
-    # (FP→1 makes it dead weight) and the round joins everything — at
-    # 10^10-host corpora the broadcast budget is the binding limit, so the
-    # filter self-disables exactly where it stops being broadcastable.
-    # DEFAULT OFF — measured a NEGATIVE result on the scaling corpus
-    # (BENCH/BASELINE.md §3e round-6 A/B: warm local[4] pairs lose 18-40 s
-    # with the filter on; the bank-build pass plus the split's second
-    # frontier-cache scan cost more than the skipped join/sort of the
-    # in-memory non-member rows). The right regime for it is a corpus too
-    # big to sort cheaply but small enough to bloom-broadcast, with the
-    # join side spilling — parity + fallback are pinned by
-    # tests/test_plans.py::test_corpus_filter_split_parity either way.
-    corpus_filter: bool = False
-    corpus_bloom_capacity: int = 16_000_000
-
     # politeness / skew (north-rule additions, M4)
     salt_buckets: int = 8           # salts per root for hot-SLD skew
     default_per_root_budget: int | None = None  # None = unlimited per round
@@ -97,6 +73,3 @@ class CrawlConfig:
     # round_window_sec // d slots per round (combined with max_per_round via
     # min; see operators/politeness.py)
     round_window_sec: int = 60
-
-    # canonical-form knobs
-    shuffle_partitions: int = 32

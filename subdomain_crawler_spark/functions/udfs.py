@@ -58,28 +58,8 @@ def udf_page_features(texts: pd.Series, roots: pd.Series) -> pd.DataFrame:
 
 
 @F.pandas_udf(ArrayType(StringType()))
-def udf_cands_in_scope(reduced_texts: pd.Series, roots: pd.Series) -> pd.Series:
-    """X1+F2 over DOT-REDUCED text (jvm.reduce_dotted ran JVM-side): the
-    Python regex sees the same token sequence core._findall_hosts would
-    select, but only those bytes ever crossed the Arrow boundary — on
-    prose-heavy pages a 20-50× cut of JVM→Python traffic. Title (X3) does
-    NOT ride here: it needs the full text, so the hybrid path extracts it
-    with the JVM regexp (jvm.extract_title, parity-pinned)."""
-    extracted = core.extract_hosts(reduced_texts)
-    return pd.Series(
-        [[c for c in cs if c == root or c.endswith("." + root)]
-         for cs, root in zip(extracted.to_numpy(), roots.to_numpy())],
-        index=reduced_texts.index)
-
-
-@F.pandas_udf(ArrayType(StringType()))
 def udf_expand_domain(seeds: pd.Series) -> pd.Series:
     return core.expand_domains(seeds)
-
-
-@F.pandas_udf(BooleanType())
-def udf_is_sld(s: pd.Series) -> pd.Series:
-    return core.canonicalize(s).map(core.is_sld_one)
 
 
 # --- text-analysis / sketch UDFs (training-data ops) -----------------------

@@ -176,51 +176,38 @@ class ShardedSeenFilter:
 
 
 def build_bank_distributed(df, column: str, num_shards: int,
-                           capacity_per_shard: int, fp: float,
-                           with_count: bool = False):
+                           capacity_per_shard: int, fp: float):
     """Build a ShardedSeenFilter over a DataFrame column WITHOUT collecting
     rows to the driver: each partition builds a partial bank (mapInPandas),
     only the serialized banks travel, the driver OR-merges them. This is how
     the bank is (re)built from the cumulative seen table on resume at scale.
-
-    ``with_count=True`` returns ``(bank, n_rows)`` — the exact row count
-    rides the same pass (one extra int per partition), so a caller sizing
-    the bank against its fill (e.g. the corpus-membership filter) pays no
-    second job to learn whether the capacity was exceeded.
     """
     from pyspark.sql.types import (
-        BinaryType, IntegerType, LongType, StructField, StructType,
+        BinaryType, IntegerType, StructField, StructType,
     )
 
     out_schema = StructType([
         StructField("shard", IntegerType()),
         StructField("bits", BinaryType()),
-        StructField("n", LongType()),
     ])
 
     def partial(batches):
         import pandas as pd  # executor-side
 
         bank = ShardedSeenFilter.build(num_shards, capacity_per_shard, fp)
-        n = 0
         for pdf in batches:
-            vals = pdf[column].dropna()
-            n += len(vals)
-            bank.add(vals)
+            bank.add(pdf[column].dropna())
         yield pd.DataFrame({
             "shard": range(num_shards),
             "bits": bank.to_bytes_list(),
-            "n": [n] + [0] * (num_shards - 1),
         })
 
     rows = df.select(column).mapInPandas(partial, out_schema).collect()
     bank = ShardedSeenFilter.build(num_shards, capacity_per_shard, fp)
     by_shard: dict[int, list[bytes]] = {}
-    total = 0
     for r in rows:
         by_shard.setdefault(r["shard"], []).append(bytes(r["bits"]))
-        total += r["n"]
     for s, bufs in by_shard.items():
         for buf in bufs:
             bank.shards[s] = bank.shards[s].union(BloomFilter.from_bytes(buf))
-    return (bank, total) if with_count else bank
+    return bank

@@ -21,11 +21,7 @@ Scale notes (10^10-URL frontier, 1000 executors):
   dedup, and the per-host PSL calls collapse to one per SEED;
 * the fetch-join broadcasts the frontier only while it is small (driver
   checks a row-count threshold); past that it falls back to a shuffle join
-  on ``host`` — with AQE enabled skewed hosts re-split at runtime; the
-  expansion round additionally routes definite corpus∪dns NON-members
-  (most of the fan-out) around the join entirely via a broadcast bloom
-  stamped during expansion (config.corpus_filter — exact: misses cannot
-  be members, false positives just take the join);
+  on ``host`` — with AQE enabled skewed hosts re-split at runtime;
 * the frontier and candidate sets are salted-repartitioned by
   ``hash(root, salt)`` before heavy stages to break hot-SLD skew
   (one university seed → thousands of candidates; reference has no answer
@@ -53,7 +49,6 @@ from pyspark.sql.types import (
 )
 
 from ..config import CrawlConfig
-from ..functions import jvm as jvm_fns
 from ..functions import udfs
 from ..operators import politeness as pol
 from ..operators import seen as seen_mod
@@ -77,20 +72,13 @@ FRONTIER_SCHEMA = StructType([
 # relations turn every write job into a driver convoy. 2M keeps broadcast
 # builds ~sub-second while still covering typical rounds; past it the
 # engine takes one shuffle-join chain (the right plan for giant rounds).
-# Env-tunable for bench A/B.
-import os as _os_mod
+BROADCAST_FRONTIER_MAX = 2_000_000
 
-BROADCAST_FRONTIER_MAX = int(_os_mod.environ.get(
-    "SPARK_GRAFT_BROADCAST_FRONTIER_MAX", 2_000_000))
-
-
-FRONTIER_FLAGGED_SCHEMA = StructType(
-    FRONTIER_SCHEMA.fields
-    + [StructField("_in_corpus", BooleanType())])
+# seed expansion runs one task per this many expanded rows (see start)
+_SEED_ROWS_PER_TASK = 250_000
 
 
-def _make_seed_expander(prefixes: list[str], expand_sld: bool,
-                        bank_bc=None):
+def _make_seed_expander(prefixes: list[str], expand_sld: bool):
     """Fused seed-expansion kernel for ``mapInPandas`` (S1+X4+D2 in ONE
     Arrow pass — round-6 rebuild of the explode + get_root-UDF + groupBy
     pipeline, whose 20 M-row dedup shuffle was the worst-scaling leg of the
@@ -173,13 +161,6 @@ def _make_seed_expander(prefixes: list[str], expand_sld: bool,
         # min-(root,depth) rule degenerates to plain drop_duplicates
         out = out.drop_duplicates("host", ignore_index=True)
         out["depth"] = np.zeros(len(out), dtype=np.int32)
-        if bank_bc is not None:
-            # corpus-membership flag computed IN the same pass (rows are
-            # already pandas here): round 0's giant join splits on it with
-            # zero extra scans or probe passes (config.corpus_filter)
-            from ..operators.seen import ShardedSeenFilter as _SSF
-            bank = _SSF.from_bytes_list(bank_bc.value)
-            out["_in_corpus"] = bank.maybe_contains(out["host"])
         yield out
 
     return expand_partition
@@ -282,10 +263,8 @@ class CrawlEngine:
         # schema snapshots taken ONCE — per-round code never calls
         # .columns on a join output (each such call re-analyzes the whole
         # plan tree on the driver, a serial per-round cost)
-        self._meta_fields = list(self.corpus_meta.schema.fields)
-        self._dns_fields = list(dns.schema.fields)
-        self._meta_cols = [f.name for f in self._meta_fields]
-        self._dns_cols = [f.name for f in self._dns_fields]
+        self._meta_cols = self.corpus_meta.schema.fieldNames()
+        self._dns_cols = dns.schema.fieldNames()
         # scan parallelism of the text column (metadata only — no job):
         # decides whether extraction needs a spreading repartition (round-4
         # fix: the unconditional repartition was pure overhead whenever the
@@ -295,9 +274,9 @@ class CrawlEngine:
             self._text_nparts = self.corpus_text.rdd.getNumPartitions()
         except Exception:
             self._text_nparts = 0
-        # Bucketing analog, ONCE per crawl (SPARK_GRAFT_PREPART=auto|1|0):
-        # the big-round regime sort-merges frontier×corpus_meta×dns on host
-        # and fetched×corpus_text on content_host, and without preparation
+        # Bucketing analog, ONCE per crawl: the big-round regime
+        # sort-merges frontier×corpus_meta×dns on host and
+        # fetched×corpus_text on content_host, and without preparation
         # the CORPUS side of every join is re-shuffled EVERY round although
         # it never changes between rounds.  Hash-partition each corpus
         # table on its join key once and persist: the cached scan keeps its
@@ -305,17 +284,11 @@ class CrawlEngine:
         # frontier side — one fewer exchange (and one fewer AQE stage
         # boundary stall) per join per round.  The real-deployment form is
         # parquet bucketing by host at ingest (no shuffle at all; see
-        # SURVEY §3).  Auto mode applies it only when the corpus scan is
-        # wide enough for the big-round regime to be in play (splits ≥
-        # cores — the same gate as the extraction repartition); tiny
-        # fixture corpora keep the untouched lazy frames.
-        prep = _os_mod.environ.get("SPARK_GRAFT_PREPART", "auto")
-        if prep not in ("auto", "0", "1"):
-            raise ValueError(
-                f"SPARK_GRAFT_PREPART={prep!r}: expected 'auto', '0' or '1'")
-        wide = (self._text_nparts
-                >= self.spark.sparkContext.defaultParallelism)
-        if prep == "1" or (prep == "auto" and wide):
+        # SURVEY §3).  Applied only when the corpus scan is wide enough
+        # for the big-round regime to be in play (splits ≥ cores — the
+        # same gate as the extraction repartition); tiny fixture corpora
+        # keep the untouched lazy frames.
+        if self._text_nparts >= self.spark.sparkContext.defaultParallelism:
             w = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
             self.corpus_meta = (self.corpus_meta
                                 .repartition(w, "host").persist())
@@ -324,14 +297,8 @@ class CrawlEngine:
             self.dns = self.dns.repartition(w, "host").persist()
         self._bank: ShardedSeenFilter | None = None
         self._bank_bc = None  # this round's broadcast handle (destroyed per round)
-        # corpus-membership bank (config.corpus_filter): built lazily on
-        # the first expansion-round giant join, broadcast once per crawl.
-        # False = tried and discarded (corpus bigger than capacity).
-        self._corpus_bank_bc = None
-        self._corpus_bank_state: bool | None = None
         self._seen_total = 0  # cumulative seen-host count (gates the bank)
         self._frontier0: DataFrame | None = None  # cached round-0 frontier
-        self._f0_flagged = False  # _frontier0 carries _in_corpus
         self._n0 = 0
 
     # -- lifecycle -----------------------------------------------------------
@@ -395,36 +362,24 @@ class CrawlEngine:
         # crawl's worst-scaling leg. depth hardcoded 0 even for expanded
         # subdomains (crawl_usecase.go:248); PSL-error root fallback quirk
         # (crawl_usecase.go:239-242) preserved inside the kernel.
-        # width sized by the WORK (~250k expanded rows/task): partitions
+        # width sized by the WORK (_SEED_ROWS_PER_TASK): partitions
         # may exceed cores (tasks queue) — that bounds per-task pandas
         # memory at any seed-list size.  (Spreading small lists across all
         # cores was A/B'd and measured NEUTRAL — the leg's fixed cost is
         # first-Python-worker startup + the frontier0 write, not kernel
         # serialization — so the simpler work-sized formula stays.)
-        # SPARK_GRAFT_SEED_WIDTH forces the partition count (tests pin the
-        # multi-partition dedup invariant on small seed lists with it).
         fanout = len(prefixes) + 1
         if n_seeds is None:
             # file path: size the width from a distributed line count (one
             # scan of the raw seed bytes, once per crawl — the ONLY job the
             # seed count costs; the list path keeps its zero-job formula)
             n_seeds = lines.count()
-        width = (int(_os_mod.environ.get("SPARK_GRAFT_SEED_WIDTH", "0"))
-                 or max(1, (n_seeds * fanout) // 250_000 + 1))
+        width = (n_seeds * fanout) // _SEED_ROWS_PER_TASK + 1
         key = udfs.udf_expand_key("seed")
-        # round 0 will run in the giant-join regime → stamp the corpus-
-        # membership flag during expansion (one fused pass; the flag rides
-        # the f0 CACHE only — the frontier table on disk keeps its schema)
-        bank_bc = None
-        if cfg.corpus_filter and n_seeds * fanout > BROADCAST_FRONTIER_MAX:
-            bank_bc = self._corpus_membership_bank()
-        self._f0_flagged = bank_bc is not None
         df = (cleaned
               .repartition(width, key)
-              .mapInPandas(
-                  _make_seed_expander(prefixes, cfg.expand_sld, bank_bc),
-                  FRONTIER_FLAGGED_SCHEMA if self._f0_flagged
-                  else FRONTIER_SCHEMA))
+              .mapInPandas(_make_seed_expander(prefixes, cfg.expand_sld),
+                           FRONTIER_SCHEMA))
         # re-hash the DEDUPED frontier by host: round 0's giant-regime
         # fetch-join needs hashpartitioning(host, w) on the frontier side,
         # and the cached f0 carrying it means round 0 runs with ZERO
@@ -440,12 +395,8 @@ class CrawlEngine:
         # lineage for the write, no read-back, no count() job.
         f0 = df.persist()
         obs = Observation()
-        # the written round-0 table keeps the 3-column frontier schema —
-        # the membership flag lives only in the cache (resume re-joins
-        # plain; the flag is a round-0 plan accelerator, not state)
-        out0 = f0.drop("_in_corpus") if self._f0_flagged else f0
         self.io.append("frontier",
-                       out0.observe(obs, F.count(F.lit(1)).alias("n")), 0)
+                       f0.observe(obs, F.count(F.lit(1)).alias("n")), 0)
         self._frontier0 = f0
         self._n0 = int(obs.get["n"] or 0)
         # G1 root-enqueue parity (crawl_usecase.go:253-257): the reference
@@ -566,20 +517,10 @@ class CrawlEngine:
 
     def run(self, seeds: list[str] | DataFrame | None = None,
             max_rounds: int = 64, progress=None) -> list[RoundStats]:
-        import os as _os
-        _timing = _os.environ.get("SPARK_GRAFT_TIMING") == "1"
-
-        def _tmark(label, t0):
-            if _timing:
-                print(f"    [run] {label}: {time.monotonic() - t0:.1f}s",
-                      flush=True)
-
         rnd = self.resume_round()
         if rnd == 0:
             assert seeds is not None, "fresh run needs seeds"
-            t0 = time.monotonic()
             self.start(seeds)
-            _tmark("seed expansion + frontier0 write", t0)
         elif self.cfg.use_bloom_prefilter and self._bank is None:
             # resume: rebuild the bank from the cumulative seen table,
             # distributed (no row collect)
@@ -597,32 +538,19 @@ class CrawlEngine:
         while rnd < max_rounds:
             if not self.io.exists("frontier", rnd):
                 break
-            t0 = time.monotonic()
-            flagged = False
             if rnd == 0 and self._frontier0 is not None:
                 # fresh start: round 0 runs off the frame the checkpoint
                 # write just materialized into the cache
                 frontier, n = self._frontier0, self._n0
-                flagged = self._f0_flagged
                 self._frontier0 = None
             else:
                 frontier = self.io.read_round("frontier", rnd).persist()
             if n is None:  # resume: one-time count
                 n = frontier.count()
-                _tmark(f"frontier r{rnd} read+count", t0)
             if n == 0:
                 frontier.unpersist()
                 break
-            st, n = self._run_round(rnd, frontier, n, flagged=flagged)
-            if flagged and self._corpus_bank_bc is not None:
-                # the expansion round was the only consumer of the corpus-
-                # membership bank (config.corpus_filter): free its
-                # serialized shards on driver + executors now rather than
-                # at context teardown. Safe: _run_round unpersisted the
-                # flagged frontier cache, so no surviving plan can need
-                # the broadcast for recompute.
-                self._corpus_bank_bc.destroy()
-                self._corpus_bank_bc = None
+            st, n = self._run_round(rnd, frontier, n)
             stats.append(st)
             if progress:
                 progress(st)
@@ -661,36 +589,7 @@ class CrawlEngine:
 
         return cand.withColumn("_maybe_seen", maybe_seen(F.col("cand")))
 
-    def _corpus_membership_bank(self):
-        """Lazily build + broadcast the corpus∪dns host bloom (see
-        config.corpus_filter). Returns the broadcast handle or None (too
-        big / disabled). The build pass also counts rows, so an over-full
-        bank (FP→1, dead weight) is detected and discarded in the same
-        job."""
-        if self._corpus_bank_state is False:
-            return None
-        if self._corpus_bank_bc is None:
-            _t0 = time.monotonic()
-            cap = self.cfg.corpus_bloom_capacity
-            bank, n = seen_mod.build_bank_distributed(
-                self.corpus_meta.select("host").unionByName(
-                    self.dns.select("host")),
-                "host", self.cfg.bloom_shards,
-                max(1024, cap // self.cfg.bloom_shards),
-                self.cfg.bloom_fp, with_count=True)
-            if n > cap:
-                self._corpus_bank_state = False
-                return None
-            self._corpus_bank_bc = self.spark.sparkContext.broadcast(
-                bank.to_bytes_list())
-            self._corpus_bank_state = True
-            if _os_mod.environ.get("SPARK_GRAFT_TIMING") == "1":
-                print(f"    [init] corpus bank build ({n} hosts): "
-                      f"{time.monotonic() - _t0:.1f}s", flush=True)
-        return self._corpus_bank_bc
-
-    def _join_frontier(self, f: DataFrame, small_round: bool,
-                       flagged: bool = False) -> DataFrame:
+    def _join_frontier(self, f: DataFrame, small_round: bool) -> DataFrame:
         """J1 fetch-join + J2 dns-join → one frame with null fetch columns
         for missing hosts and the rcode=-1 total-DNS-failure sentinel
         (resolver.go:84-97; an NXDOMAIN RESPONSE leaves err==nil upstream,
@@ -699,30 +598,13 @@ class CrawlEngine:
         groups skipped via the build-side filter), then the frontier
         LEFT-joins the frontier-sized extracts broadcast — zero frontier
         shuffles. Giant rounds: one shuffle left-join chain on host (the
-        second join reuses the first's hash partitioning). A FLAGGED giant
-        frontier (fresh round 0 — the seed expander stamped ``_in_corpus``
-        from the corpus∪dns membership bloom, config.corpus_filter) splits
-        instead: definite non-members — most of the ~134× fan-out — bypass
-        the join/sort with the same null columns a failed left join
-        yields; possible members (incl. all false positives) take the
-        exact join, so the output is bit-identical to the unsplit plan."""
+        second join reuses the first's hash partitioning)."""
         if small_round:
             fh = F.broadcast(f.select("host"))
             meta_small = self.corpus_meta.join(fh, "host", "inner")
             dns_small = self.dns.join(fh, "host", "inner")
             j = (f.join(F.broadcast(meta_small), "host", "left")
                   .join(F.broadcast(dns_small), "host", "left"))
-        elif flagged:
-            hit = f.filter(F.col("_in_corpus")).drop("_in_corpus")
-            miss = f.filter(~F.col("_in_corpus")).drop("_in_corpus")
-            j_hit = (hit.join(self.corpus_meta, "host", "left")
-                     .join(self.dns, "host", "left"))
-            nulls = ([F.lit(None).cast(fld.dataType).alias(fld.name)
-                      for fld in self._meta_fields if fld.name != "host"]
-                     + [F.lit(None).cast(fld.dataType).alias(fld.name)
-                        for fld in self._dns_fields if fld.name != "host"])
-            j = j_hit.unionByName(miss.select("host", "root", "depth",
-                                              *nulls))
         else:
             j = (f.join(self.corpus_meta, "host", "left")
                   .join(self.dns, "host", "left"))
@@ -741,29 +623,18 @@ class CrawlEngine:
             F.coalesce(F.col("rcode"), F.lit(-1)).cast("int").alias("rcode"))
 
     def _run_round(self, rnd: int, frontier: DataFrame,
-                   tasks_processed: int,
-                   flagged: bool = False) -> tuple[RoundStats, int]:
+                   tasks_processed: int) -> tuple[RoundStats, int]:
         """One crawl round. Returns (stats, next-frontier row count — observed
-        on the frontier write, so the next round needs no count() job).
-        ``flagged``: the frontier carries the ``_in_corpus`` membership
-        flag (fresh round 0 only — see _join_frontier)."""
+        on the frontier write, so the next round needs no count() job)."""
         t0 = time.monotonic()
         cfg = self.cfg
         spark = self.spark
 
         # tiny rounds write single-task files (avoids 32 near-empty tasks per
         # write); bigger rounds keep full write parallelism — a serialized
-        # write would cap scaling. SPARK_GRAFT_WRITE_FILES caps the file
-        # count of the wave-2b cache-scan writes only (fewer concurrent
-        # write streams on a single shared disk — A/B lever for the
-        # one-virtio-disk sandbox; wave 2a is exempt because its write
-        # MATERIALIZES the winner lineage and a coalesce there would
-        # shrink the aggregation stage itself).
+        # write would cap scaling.
         small = tasks_processed < 20_000
         shrink = (lambda df: df.coalesce(1)) if small else (lambda df: df)
-        wcap = int(_os_mod.environ.get("SPARK_GRAFT_WRITE_FILES", "0"))
-        shrink2b = ((lambda df: df.coalesce(wcap)) if wcap and not small
-                    else shrink)
 
         # politeness (W2, north-rule addition): per-root budget via salted
         # window; deferred rows carry over to the next round's frontier
@@ -801,8 +672,7 @@ class CrawlEngine:
         http_att = active & ~fetched_https
         http_ok = http_att & has("http")
         fetched_http = http_ok & is2xx
-        j0 = self._join_frontier(f, small_round,
-                                 flagged=flagged and not small_round)
+        j0 = self._join_frontier(f, small_round)
         # depth is folded into `active` and proto_ok into the avail/ok
         # flags — neither raw column is read downstream, so neither is
         # cached (every dropped column is one fewer per-round cache pass).
@@ -886,19 +756,11 @@ class CrawlEngine:
         # same frontier-size threshold as the fetch-join: a 10^10-row round
         # would OOM the driver if broadcast unconditionally); the captions
         # stream scan → extraction and are dropped before the cache.
-        # THREE semantics-equal extraction regimes, selected by
-        # SPARK_GRAFT_EXTRACT = fused (default) | hybrid | jvm
-        # (SPARK_GRAFT_JVM_EXTRACT=1 keeps forcing jvm for back-compat).
-        # A/B history: round 3 measured the pure-JVM Catalyst chain ~2×
-        # slower per core than the fused Arrow UDF (Java backtracking regex
-        # vs C). Round 4 hypothesized the fused path was Arrow-IPC-bound
-        # at multi-core and built the hybrid (JVM-side dot-token reduction
-        # so only dot-bearing tokens cross into the C-regex UDF; JVM
-        # title) — MEASURED 1.8× SLOWER (255 vs 143 s, local[4], 24k
-        # prose corpus): Java's regex split materializes ~10^9 token
-        # objects and the allocation/GC churn dwarfs the Arrow savings.
-        # Negative result kept selectable + recorded in BENCH/BASELINE.md
-        # §3a; the fused ONE-Arrow-pass UDF stays the default.
+        # Extraction is one Arrow pass of the fused UDF over the full text:
+        # the C regex beats Java's backtracking regex per core, and a
+        # JVM-side dot-token reduction costs more in allocation/GC than it
+        # saves in Arrow bytes (both measured 1.8-2× slower,
+        # BENCH/BASELINE.md §3a).
         # join the text column on content_host: for redirect sources the
         # client returns the TERMINAL host's body (content_host != host);
         # for everything else content_host == host and this is the same
@@ -921,48 +783,11 @@ class CrawlEngine:
         # would reshuffle the whole text column.
         if 0 < self._text_nparts < width:
             base_pages = base_pages.repartition(width, "host")
-        mode = _os_mod.environ.get("SPARK_GRAFT_EXTRACT", "fused")
-        if _os_mod.environ.get("SPARK_GRAFT_JVM_EXTRACT") == "1":
-            mode = "jvm"
-        if mode not in ("fused", "hybrid", "jvm"):
-            raise ValueError(
-                f"SPARK_GRAFT_EXTRACT={mode!r}: expected one of "
-                "'fused' (default), 'hybrid', 'jvm'")
-        if mode == "jvm":
-            # pure-Catalyst chain: zero Arrow traffic, but Java's
-            # backtracking regex is ~2× the C engine per core
-            pages = (base_pages
-                     .select("host", "root",
-                             jvm_fns.extract_in_scope("caption", "root")
-                             .alias("cands"),
-                             jvm_fns.extract_title("caption").alias("title"))
-                     .persist())
-        elif mode == "fused":
-            # one Arrow pass over the FULL text (round-3 default): C regex,
-            # but every caption byte crosses JVM→Arrow→Python
-            pages = (base_pages
-                     .withColumn("pf", udfs.udf_page_features("caption", "root"))
-                     .select("host", "root", F.col("pf.cands").alias("cands"),
-                             F.col("pf.title").alias("title"))
-                     .persist())
-        else:
-            # hybrid (round-4 negative-result option — measured 1.8× SLOWER
-            # than the fused default in BENCH/BASELINE.md §3a, kept
-            # selectable for A/B): the dot-token reduction runs JVM-side, so only
-            # dot-bearing tokens (20-50× fewer bytes on prose) cross the
-            # Arrow boundary into the C-regex kernel; the title — which
-            # needs the full text — is extracted by the JVM regexp
-            # (parity-pinned incl. non-ASCII). Best of both: C regex for
-            # the backtracking-heavy host pattern, JVM for the linear
-            # scans, minimal Arrow IPC — at 100 TB the boundary traffic
-            # IS the extraction cost.
-            pages = (base_pages
-                     .select("host", "root",
-                             udfs.udf_cands_in_scope(
-                                 jvm_fns.reduce_dotted("caption"),
-                                 F.col("root")).alias("cands"),
-                             jvm_fns.extract_title("caption").alias("title"))
-                     .persist())
+        pages = (base_pages
+                 .withColumn("pf", udfs.udf_page_features("caption", "root"))
+                 .select("host", "root", F.col("pf.cands").alias("cands"),
+                         F.col("pf.title").alias("title"))
+                 .persist())
 
         exploded = pages.select(
             F.col("host").alias("parent"), F.col("root").alias("parent_root"),
@@ -1054,9 +879,6 @@ class CrawlEngine:
                                    F.count(F.lit(1)).alias("enqueued")))
         next_frontier = novel_frontier
         if deferred is not None:
-            # explicit 3-column projection: a flagged round-0 frontier
-            # carries _in_corpus through the politeness split, and the
-            # flag must not leak into the written frontier table
             next_frontier = self._dedup_frontier(
                 next_frontier.unionByName(
                     deferred.select("host", "root", "depth")))
@@ -1092,23 +914,6 @@ class CrawlEngine:
         obs_novel = Observation()
         novel_df = (winner.select(F.col("cand").alias("host"))
                     .observe(obs_novel, F.count(F.lit(1)).alias("novel")))
-        import os as _os
-        _timing = _os.environ.get("SPARK_GRAFT_TIMING") == "1"
-        _t = time.monotonic()
-
-        def _mark(label):
-            nonlocal _t
-            if _timing:
-                print(f"    [r{rnd}] {label}: {time.monotonic() - _t:.1f}s",
-                      flush=True)
-            _t = time.monotonic()
-
-        def _timed_append(table, df, r):
-            w0 = time.monotonic()
-            self.io.append(table, df, r)
-            if _timing:
-                print(f"    [r{rnd}]   write {table}: "
-                      f"{time.monotonic() - w0:.1f}s", flush=True)
 
         # Wave 2a: the seen write's lineage (winner ← exploded ← pages ← j)
         # covers every cache this round uses, so this ONE action both
@@ -1123,19 +928,17 @@ class CrawlEngine:
         # serialized; this staged form keeps the concurrency that is
         # actually parallel). dns_log is a pure projection of the cached j
         # since the dns columns were folded into the wave-1 join.
-        _timed_append("seen", shrink(novel_df), rnd)
-        _mark("wave2a seen (materializes j+pages+winner)")
+        self.io.append("seen", shrink(novel_df), rnd)
         with ThreadPoolExecutor(max_workers=4) as pool:
             writes = [
-                pool.submit(_timed_append, "results", shrink2b(results), rnd),
-                pool.submit(_timed_append, "http_log", shrink2b(http_log), rnd),
-                pool.submit(_timed_append, "dns_log", shrink2b(dns_log), rnd),
-                pool.submit(_timed_append, "frontier", shrink2b(next_frontier),
+                pool.submit(self.io.append, "results", shrink(results), rnd),
+                pool.submit(self.io.append, "http_log", shrink(http_log), rnd),
+                pool.submit(self.io.append, "dns_log", shrink(dns_log), rnd),
+                pool.submit(self.io.append, "frontier", shrink(next_frontier),
                             rnd + 1),
             ]
             for w in writes:
                 w.result()
-        _mark("wave2b writes")
         agg = obs_j.get
         n_next = int(obs_f.get["n"])
         unique_subdomains = int(obs_novel.get["novel"] or 0)
@@ -1158,7 +961,6 @@ class CrawlEngine:
         )
         self.io.append_local("metrics", pd.DataFrame([st.__dict__]), rnd)
         self.io.commit_round(rnd)
-        _mark("obs+metrics+commit")
 
         # fold this round's novelties into the bloom bank — distributed build,
         # only serialized shard banks cross the driver boundary. Below
@@ -1180,7 +982,6 @@ class CrawlEngine:
                 max(1024, cfg.bloom_capacity // cfg.bloom_shards),
                 cfg.bloom_fp)
             self._bank = fresh if self._bank is None else self._bank.merge(fresh)
-            _mark("bloom bank fold")
 
         for df in (frontier, j, pages, winner):
             df.unpersist()

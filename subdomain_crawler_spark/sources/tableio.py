@@ -67,25 +67,12 @@ class ParquetSnapshotIO:
         return os.path.join(self.base, table, f"round={round_no}")
 
     def append(self, table: str, df: DataFrame, round_no: int) -> None:
-        # Write-tier levers (A/B'd in BENCH/BASELINE.md §3e; defaults
-        # measured): SPARK_GRAFT_LOG_CODEC sets the parquet codec for these
-        # scratch-tier round tables — default zstd, which beat snappy by
-        # 8-18% warm wall at local[4] in both interleaved sweeps (fewer
-        # bytes through the memory bus, the binding resource of the write
-        # wave, outweighs its higher encode CPU; lz4 and uncompressed also
-        # beat snappy but by less). "spark" restores the session default
-        # (snappy). SPARK_GRAFT_LOG_DICT=0 disables dictionary encoding
-        # (host/url columns are mostly-unique, so the dictionary build is a
-        # wasted hash+copy pass that falls back to plain anyway).
-        w = df.write.mode("overwrite")
-        codec = os.environ.get("SPARK_GRAFT_LOG_CODEC", "zstd")
-        if codec == "spark":
-            codec = ""
-        if codec:
-            w = w.option("compression", codec)
-        if os.environ.get("SPARK_GRAFT_LOG_DICT", "1") == "0":
-            w = w.option("parquet.enable.dictionary", "false")
-        w.parquet(self.round_dir(table, round_no))
+        # zstd for these scratch-tier round tables: it beat snappy by 8-18%
+        # warm wall at local[4] in both interleaved sweeps (BENCH/BASELINE.md
+        # §3e — fewer bytes through the memory bus, the binding resource of
+        # the write wave, outweigh its higher encode CPU).
+        (df.write.mode("overwrite").option("compression", "zstd")
+         .parquet(self.round_dir(table, round_no)))
 
     def read_round(self, table: str, round_no: int) -> DataFrame:
         return self.spark.read.parquet(self.round_dir(table, round_no))

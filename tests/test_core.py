@@ -243,13 +243,13 @@ def test_canonicalize():
     assert list(core.canonicalize(s)) == ["www.example.com", "a.b.c"]
 
 
-def test_jvm_extraction_parity(spark):
-    """The crawl's JVM extraction path (functions/jvm.py — regexp_extract_all
-    / array_distinct / filter / regexp_replace) must match the Python
-    kernels exactly: same matches, same first-wins dedup order, same scope
-    filter, same title normalization. Edge family: emails, path lookalikes,
-    mixed case, duplicates, multi-title, control chars, empty."""
-    from subdomain_crawler_spark.functions import jvm
+def test_page_features_extraction_parity(spark):
+    """The crawl's one extraction path (udfs.udf_page_features — X1+F2+X3
+    in one Arrow pass) must match the per-text kernels exactly: same
+    matches, same first-wins dedup order, same scope filter, same title
+    normalization. Edge family: emails, path lookalikes, mixed case,
+    duplicates, multi-title, control chars, empty, non-ASCII."""
+    from subdomain_crawler_spark.functions import udfs
 
     texts = [
         "plain text no hosts here",
@@ -261,30 +261,24 @@ def test_jvm_extraction_parity(spark):
         "no title but a-b.example.com and -bad-.example.com and a..b",
         "",
         "proto-relative //static.example.com/x and deep.a.b.example.com",
-        # non-ASCII parity (round-4 advice): NBSP / ideographic-space token
-        # boundaries, Unicode-whitespace title edges, KELVIN-sign case fold
-        "nbsp x.example.com tail and　y.example.com　ok",
-        "<title>  padded  title  </title> z.example.com",
-        "kelvin Kelvin.example.com and long-s ſad.example.com",
-        "héllo wörld café.example.com plain.example.com",
+        # non-ASCII: NBSP / ideographic-space token boundaries,
+        # Unicode-whitespace title edges, KELVIN-sign case fold
+        "nbsp\u00a0x.example.com\u00a0tail and\u3000y.example.com\u3000ok",
+        "<title>\u00a0 padded \u2003title \u00a0</title> z.example.com",
+        "kelvin \u212aelvin.example.com and long-s \u017fad.example.com",
+        "h\u00e9llo w\u00f6rld caf\u00e9.example.com plain.example.com",
     ]
     root = "example.com"
-    import pandas as pd
     df = spark.createDataFrame(
         pd.DataFrame({"caption": texts, "root": [root] * len(texts)}))
-    got = (df.select(
-        jvm.extract_hosts("caption").alias("hosts"),
-        jvm.extract_in_scope("caption", "root").alias("cands"),
-        jvm.extract_title("caption").alias("title"))
-        .collect())
-    from subdomain_crawler_spark.functions import core
+    got = (df.select(udfs.udf_page_features("caption", "root").alias("pf"))
+           .collect())
+    assert len(got) == len(texts)
     for text, row in zip(texts, got):
-        want_hosts = core.extract_hosts_one(text)
-        assert list(row.hosts) == want_hosts, text
-        want_scope = [c for c in want_hosts
+        want_scope = [c for c in core.extract_hosts_one(text)
                       if c == root or c.endswith("." + root)]
-        assert list(row.cands) == want_scope, text
-        assert row.title == core.extract_title_one(text), text
+        assert list(row.pf.cands) == want_scope, text
+        assert row.pf.title == core.extract_title_one(text), text
 
 
 def test_etld_fast_path_parity():

@@ -90,8 +90,7 @@ def test_results_match_golden(crawl_pair):
             f"error mismatch at {want['domain'][i]}"
 
 
-def test_metrics_match(crawl_pair):
-    eng, stats, sim = crawl_pair
+def _assert_metrics_match(stats, sim):
     want = sim.metrics
     for st in stats:
         row = want[want["round"] == st.round].iloc[0]
@@ -101,6 +100,11 @@ def test_metrics_match(crawl_pair):
             assert getattr(st, k) == row[k], f"round {st.round} metric {k}"
 
 
+def test_metrics_match(crawl_pair):
+    eng, stats, sim = crawl_pair
+    _assert_metrics_match(stats, sim)
+
+
 def test_log_volumes_match(crawl_pair):
     eng, stats, sim = crawl_pair
     last = len(stats) - 1
@@ -108,15 +112,26 @@ def test_log_volumes_match(crawl_pair):
     assert eng.io.read_upto("dns_log", last).count() == len(sim.dns_log)
 
 
-def test_jvm_extract_crawl_equivalence(spark, fixture_web, tmp_path,
-                                       monkeypatch):
-    """SPARK_GRAFT_JVM_EXTRACT=1 (Catalyst extraction chain) must produce
-    the same crawl as the simulator — the whole-fixture seen set and
-    per-round frontier counts pin it (the default Arrow-UDF path is pinned
-    by the main crawl_pair goldens)."""
-    monkeypatch.setenv("SPARK_GRAFT_JVM_EXTRACT", "1")
+def test_giant_regime_crawl_equivalence(spark, fixture_web, tmp_path,
+                                        monkeypatch):
+    """The shuffle-join regime (every round above BROADCAST_FRONTIER_MAX:
+    plain left-join chain on host, no broadcast hints on the frontier or
+    its derived sides) must produce the same crawl as the simulator. The
+    corpus and dns tables arrive with >= defaultParallelism splits, so the
+    corpus pre-partition (hash-partitioned, persisted join sides) is
+    active too."""
+    from subdomain_crawler_spark.plans import crawl as crawl_mod
+
+    monkeypatch.setattr(crawl_mod, "BROADCAST_FRONTIER_MAX", 0)
+    width = spark.sparkContext.defaultParallelism
+    base = fixture_web["base"]
+    corpus = spark.read.parquet(f"{base}/corpus.parquet").repartition(width)
+    dns = spark.read.parquet(f"{base}/dns.parquet").repartition(width)
     cfg = CrawlConfig(honor_robots=False, use_bloom_prefilter=False)
-    eng, stats = _run_engine(spark, fixture_web, tmp_path / "jvm", cfg)
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "crawl"), corpus, dns)
+    assert eng.corpus_meta.is_cached and eng.corpus_text.is_cached
+    assert eng.dns.is_cached
+    stats = eng.run(seeds=fixture_web["seeds"], max_rounds=10)
     sim = _sim(fixture_web, cfg)
     assert len(stats) == len(sim.frontiers)
     got = {x.host
@@ -124,6 +139,10 @@ def test_jvm_extract_crawl_equivalence(spark, fixture_web, tmp_path,
     assert got == set(sim.seen)
     for st, sim_rows in zip(stats, sim.frontiers):
         assert st.tasks_processed == len(sim_rows)
+        got_f = {(x.host, x.root, x.depth) for x in
+                 eng.io.read_round("frontier", st.round).collect()}
+        assert got_f == set(sim_rows), f"round {st.round} frontier mismatch"
+    _assert_metrics_match(stats, sim)
 
 
 def test_response_size_cap(spark, tmp_path):
@@ -185,7 +204,10 @@ def test_wildcard_parent_seeds_multipartition_dedup(spark, tmp_path,
     per-partition dedup missed the cross-partition duplicate host and
     round 0 processed www.kawasaki.jp twice. Pin: frontier 0 has no
     duplicate hosts and equals the deduped reference expansion."""
-    monkeypatch.setenv("SPARK_GRAFT_SEED_WIDTH", "8")
+    from subdomain_crawler_spark.plans import crawl as crawl_mod
+
+    # ~1k expanded rows at 128 rows/task: the expander runs ~9 partitions
+    monkeypatch.setattr(crawl_mod, "_SEED_ROWS_PER_TASK", 128)
     corpus = spark.createDataFrame(
         [("kawasaki.jp", ["https"], 200, "hello")],
         "host string, proto_ok array<string>, status_code int, caption string")
