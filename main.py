@@ -2,10 +2,12 @@
 
 Reference: /root/reference/cmd/subdomain-crawler/main.go:15-89 with flags at
 pkg/interface/cli/config.go:12-54 (input `-i` file-or-stdin, output JSONL
-paths, --max-depth, --workers, --expand-sld, --bloom-size/--bloom-fp,
---dashboard). Flags that only parameterize live-network machinery (timeouts,
-user-agent, queue-size) have no offline analog and are intentionally absent —
-the corpus/dns tables ARE the network here (SURVEY.md §2.1 S6/S7).
+paths, --max-depth, --workers, --expand-sld, --dashboard, ...).
+--http-timeout, --dns-timeout, --bloom-size and --bloom-fp are accepted
+(and validated as the reference does) for CLI parity but have no effect:
+the corpus/dns tables ARE the network here (SURVEY.md §2.1 S6/S7), so
+nothing can time out, and the seen set is an exact anti-join, not a bloom
+filter.
 --dashboard renders the presenter twin of the reference TUI
 (subdomain_crawler_spark/dashboard.py) — per-round repaint of counters,
 rates, success %, and the recent-discoveries ring.
@@ -81,12 +83,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         "http.jsonl request transcript "
                         "[ref: cli/config.go:30]")
     p.add_argument("--http-timeout", type=int, default=10,
-                   help="HTTP request timeout in seconds — validated and "
-                        "recorded for CLI parity; the offline corpus join "
-                        "cannot time out [ref: cli/config.go:28]")
+                   help="HTTP request timeout in seconds — validated for "
+                        "CLI parity; no effect on the offline engine (the "
+                        "corpus join cannot time out) "
+                        "[ref: cli/config.go:28]")
     p.add_argument("--dns-timeout", type=int, default=5,
-                   help="DNS query timeout in seconds — validated and "
-                        "recorded for CLI parity (same offline note) "
+                   help="DNS query timeout in seconds — validated for "
+                        "CLI parity; no effect on the offline engine "
                         "[ref: cli/config.go:37]")
     p.add_argument("--queue-size", type=int, default=10_000,
                    help="reference task-queue size — validated and "
@@ -103,9 +106,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         "frontier semantics deterministically) "
                         "[ref: queue.go:25-39]")
     p.add_argument("--bloom-size", type=int, default=1_000_000,
-                   help="seen-filter capacity [ref default 1e6]")
+                   help="seen-filter capacity — accepted for CLI "
+                        "parity; no effect (the seen set is exact) "
+                        "[ref default 1e6]")
     p.add_argument("--bloom-fp", type=float, default=0.01,
-                   help="seen-filter false-positive rate [ref default 0.01]")
+                   help="seen-filter false-positive rate — validated for "
+                        "CLI parity; no effect (the seen set is exact) "
+                        "[ref default 0.01]")
     p.add_argument("--dashboard", action="store_true",
                    help="render the live text dashboard (counters, rates, "
                         "recent-discoveries ring) to stderr per round "
@@ -190,12 +197,8 @@ def main(argv: list[str] | None = None) -> int:
         max_depth=args.max_depth,
         expand_sld=args.expand_sld,
         custom_prefixes=custom,
-        bloom_capacity=args.bloom_size,
-        bloom_fp=args.bloom_fp,
         max_response_size=args.max_response_size,
         user_agent=args.user_agent,
-        http_timeout=args.http_timeout,
-        dns_timeout=args.dns_timeout,
         queue_size=args.queue_size,
         enforce_queue_cap=args.enforce_queue_cap,
     )

@@ -7,8 +7,9 @@ snapshot-committed parquet tables:
 
 * per-row logic (hostname extraction, PSL roots, image validation) runs in
   vectorized pandas/Arrow UDFs — no per-row Python;
-* the global URL-seen set is an exact ``left_anti`` join accelerated by a
-  broadcast bloom filter (reference: pkg/infrastructure/storage/bloom_filter.go);
+* the global URL-seen set is an exact ``left_anti`` join against the
+  cumulative seen table (the reference's bloom filter,
+  pkg/infrastructure/storage/bloom_filter.go, drops ~1% of new hosts);
 * scheduling is a salted-root repartition + per-host politeness window
   (north-rule addition; the reference uses a FIFO channel,
   pkg/infrastructure/storage/queue.go);

@@ -1,24 +1,25 @@
-"""URL-seen set: exact anti-join ground truth + sharded-bloom accelerator.
+"""URL-seen set kernels: vectorized FNV-1a and a numpy bloom filter.
 
 Reference D1: a single RWMutex-guarded bloom (1e6 @ 1% FP,
-/root/reference/pkg/infrastructure/storage/bloom_filter.go:26-46,
+pkg/infrastructure/storage/bloom_filter.go:26-46,
 pkg/interface/cli/config.go:43-45) whose false positives silently drop ~1% of
 genuinely-new hosts, and whose check-then-add race admits rare duplicates
 (worker.go:172-174). Neither behavior is reproducible deterministically, so
-the canonical semantics here are the EXACT ``left_anti`` join against the
-cumulative seen table; the bloom is a pruning accelerator that may only
-fast-path definite negatives — it never changes results.
+the batch engine's seen set is the EXACT ``left_anti`` join of each round's
+distinct candidates against the cumulative seen table (plans/crawl.py), with
+no filter in front of it.
 
-Scale design (10^10-host frontier): a single bloom at 1% FP for 10^10 keys is
-~12 GB — too big to broadcast. We shard by ``fnv64(host) % shards``: each
-shard is an independent bloom; the broadcast payload is the shard bank, and
-membership probes stay O(k) per host inside an Arrow batch. On a real
-cluster, shards line up with the seen table's hash-partitioning so executors
-only fault in the shards their partition needs; Spark's own runtime bloom
-(``spark.sql.optimizer.runtime.bloomFilter.enabled``) additionally
-accelerates the exact anti-join.
+Spark's runtime bloom filter (``spark.sql.optimizer.runtime.bloomFilter``,
+on by default) does not accelerate that join. In the giant-regime plan
+(frontier above ``BROADCAST_FRONTIER_MAX``, broadcast joins off) neither
+side of ``SortMergeJoin [cand], [host], LeftAnti`` carries a
+``might_contain`` filter, even with the rule's size thresholds forced to 0;
+the rule only injects filters into the fetch-join's joins on ``host``.
 
-All probe/add paths are numpy-vectorized over pandas batches.
+The bloom filter here backs the streaming dedup's constant-memory
+``state_mode="bloom"`` (streaming/dedup.py), where a false-positive drop is
+the accepted trade. All probe/add paths are numpy-vectorized over pandas
+batches.
 """
 
 from __future__ import annotations
@@ -39,9 +40,9 @@ def fnv64(values: pd.Series | list[str]) -> np.ndarray:
 
     Vectorized by byte POSITION: hostnames are short (≲64 bytes), so the
     whole Arrow batch folds in maxlen vectorized uint64 passes instead of a
-    per-string per-byte Python loop — this runs inside ``maybe_seen`` on
-    every candidate batch every round once the bloom bank activates, so it
-    must be C-speed (same values as the scalar FNV-1a)."""
+    per-string per-byte Python loop — this runs on every micro-batch of the
+    streaming ``state_mode="bloom"`` dedup, so it must be C-speed (same
+    values as the scalar FNV-1a)."""
     arr = values.to_numpy() if isinstance(values, pd.Series) else values
     from ..functions.text import padded_bytes
 
@@ -121,6 +122,10 @@ class BloomFilter:
         return cls(int(m), int(k), np.frombuffer(buf, dtype=np.uint8, offset=16).copy())
 
 
+# ShardedSeenFilter and build_bank_distributed have no caller in the
+# engine (its seen set is the exact anti-join alone); they stay only because
+# perfbench's tracer wraps ``build_bank_distributed`` by name at the start of
+# every traced sample. Delete them together with that hook.
 @dataclass
 class ShardedSeenFilter:
     """Bank of ``shards`` independent blooms, routed by fnv64(host) % shards.

@@ -5,7 +5,7 @@ One round = one Spark job over the frontier DataFrame:
     frontier ──F4 depth gate──► J1 fetch-join vs corpus
         ├─ W1 first-success https→http (derived columnar, no 2nd join)
         ├─ X1+F2 extraction (fused Arrow UDF) + X3 title
-        ├─ D1 global dedup: [bloom-bank pre-prune] + exact left_anti vs seen
+        ├─ D1 global dedup: exact left_anti vs cumulative seen
         ├─ winner resolution (canonical min-parent, §3.4 determinism rule)
         └─ writes: results / http_log / dns_log / metrics / seen / next frontier
                    → atomic manifest commit (checkpoint/resume, M6)
@@ -26,10 +26,11 @@ Scale notes (10^10-URL frontier, 1000 executors):
   ``hash(root, salt)`` before heavy stages to break hot-SLD skew
   (one university seed → thousands of candidates; reference has no answer
   to this, SURVEY.md §4);
-* the seen set is parquet-partitioned per round; the anti-join is pre-pruned
-  by a broadcast sharded-bloom bank (operators/seen.py) so only
-  possibly-seen candidates shuffle; Spark's runtime bloom filter further
-  prunes the exact join;
+* the seen set is parquet-partitioned per round, and D1 is one exact
+  ``left_anti`` of the round's distinct candidates against it (the
+  candidate side broadcasts into the winner join while the round is small).
+  Nothing pre-prunes it: Spark's runtime bloom filter is not injected into
+  the anti-join (its plan shows no ``might_contain`` on either side);
 * per-round tables are append-only round=N dirs → lineage is cut at every
   round boundary (no iterative-union plan explosion), and resume is "read
   the last committed round" (M6).
@@ -45,14 +46,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType, IntegerType, StringType, StructField, StructType,
+    IntegerType, StringType, StructField, StructType,
 )
 
 from ..config import CrawlConfig
 from ..functions import udfs
 from ..operators import politeness as pol
-from ..operators import seen as seen_mod
-from ..operators.seen import ShardedSeenFilter
 from ..sources.tableio import ParquetSnapshotIO
 
 _REASON = {200: "OK", 301: "Moved Permanently", 404: "Not Found",
@@ -295,9 +294,6 @@ class CrawlEngine:
             self.corpus_text = (self.corpus_text
                                 .repartition(w, "content_host").persist())
             self.dns = self.dns.repartition(w, "host").persist()
-        self._bank: ShardedSeenFilter | None = None
-        self._bank_bc = None  # this round's broadcast handle (destroyed per round)
-        self._seen_total = 0  # cumulative seen-host count (gates the bank)
         self._frontier0: DataFrame | None = None  # cached round-0 frontier
         self._n0 = 0
 
@@ -521,17 +517,6 @@ class CrawlEngine:
         if rnd == 0:
             assert seeds is not None, "fresh run needs seeds"
             self.start(seeds)
-        elif self.cfg.use_bloom_prefilter and self._bank is None:
-            # resume: rebuild the bank from the cumulative seen table,
-            # distributed (no row collect)
-            seen = self._cumulative_seen(rnd)
-            if seen is not None:
-                self._seen_total = seen.count()
-                if self._seen_total >= self.cfg.bloom_min_seen:
-                    self._bank = seen_mod.build_bank_distributed(
-                        seen, "host", self.cfg.bloom_shards,
-                        max(1024, self.cfg.bloom_capacity // self.cfg.bloom_shards),
-                        self.cfg.bloom_fp)
         stats: list[RoundStats] = []
         n: int | None = None  # carried forward from the frontier write's
         # observation — no per-round count() job after round 0
@@ -570,24 +555,6 @@ class CrawlEngine:
                   .agg(F.min(F.struct("root", "depth")).alias("_w"))
                   .select("host", F.col("_w.root").alias("root"),
                           F.col("_w.depth").alias("depth")))
-
-    def _cumulative_seen(self, rnd: int) -> DataFrame | None:
-        return self.io.read_upto("seen", rnd - 1)
-
-    def _maybe_new_filter(self, cand: DataFrame) -> DataFrame:
-        """D1b: split candidates via the broadcast bloom bank — definite-new
-        rows skip the exact anti-join entirely. The broadcast handle is kept
-        on self and destroyed at end-of-round (a long crawl would otherwise
-        leak one executor-resident bank per round)."""
-        bank_bc = self.spark.sparkContext.broadcast(self._bank.to_bytes_list())
-        self._bank_bc = bank_bc
-
-        @F.pandas_udf(BooleanType())
-        def maybe_seen(hosts: pd.Series) -> pd.Series:
-            bank = ShardedSeenFilter.from_bytes_list(bank_bc.value)
-            return pd.Series(bank.maybe_contains(hosts), index=hosts.index)
-
-        return cand.withColumn("_maybe_seen", maybe_seen(F.col("cand")))
 
     def _join_frontier(self, f: DataFrame, small_round: bool) -> DataFrame:
         """J1 fetch-join + J2 dns-join → one frame with null fetch columns
@@ -795,8 +762,7 @@ class CrawlEngine:
         )
 
         # ---- D1: novel = candidates not in cumulative seen -------------------
-        seen = self._cumulative_seen(rnd)
-        split = None
+        seen = self.io.read_upto("seen", rnd - 1)
         bc = F.broadcast if tasks_processed <= BROADCAST_FRONTIER_MAX \
             else (lambda df: df)
         if seen is None:
@@ -806,17 +772,10 @@ class CrawlEngine:
             # exploded candidate set in the crawl's biggest round (the
             # winner groupBy alone produces the distinct-cand set).
             survivors = exploded
-        elif self._bank is not None:
-            cand_dist = exploded.select("cand").distinct()
-            split = self._maybe_new_filter(cand_dist).persist()
-            suspects = (split.filter("_maybe_seen").drop("_maybe_seen")
-                        .join(seen, F.col("cand") == F.col("host"), "left_anti"))
-            novel = split.filter("NOT _maybe_seen").drop("_maybe_seen").unionByName(suspects)
-            survivors = exploded.join(bc(novel.select("cand")), "cand")
         else:
             novel = (exploded.select("cand").distinct()
                      .join(seen, F.col("cand") == F.col("host"), "left_anti"))
-            survivors = exploded.join(bc(novel.select("cand")), "cand")
+            survivors = exploded.join(bc(novel), "cand")
 
         # winner = canonical min-parent claim per novel cand; pos rides along
         # in the min-struct (one pos per (cand, parent) — per-page dedup), so
@@ -962,32 +921,6 @@ class CrawlEngine:
         self.io.append_local("metrics", pd.DataFrame([st.__dict__]), rnd)
         self.io.commit_round(rnd)
 
-        # fold this round's novelties into the bloom bank — distributed build,
-        # only serialized shard banks cross the driver boundary. Below
-        # bloom_min_seen the bank stays off: two extra jobs/round for a prune
-        # the tiny exact anti-join doesn't need.
-        self._seen_total += unique_subdomains
-        if (cfg.use_bloom_prefilter and unique_subdomains
-                and self._seen_total >= cfg.bloom_min_seen):
-            if self._bank is None:
-                # first activation: cover everything seen so far
-                src = self._cumulative_seen(rnd + 1)
-            else:
-                # fresh projection (not novel_df: its Observation belongs to
-                # the seen write's action alone)
-                src = winner.select(F.col("cand").alias("host"))
-            fresh = seen_mod.build_bank_distributed(
-                src, "host",
-                cfg.bloom_shards,
-                max(1024, cfg.bloom_capacity // cfg.bloom_shards),
-                cfg.bloom_fp)
-            self._bank = fresh if self._bank is None else self._bank.merge(fresh)
-
         for df in (frontier, j, pages, winner):
             df.unpersist()
-        if split is not None:
-            split.unpersist()
-        if self._bank_bc is not None:
-            self._bank_bc.destroy()
-            self._bank_bc = None
         return st, n_next

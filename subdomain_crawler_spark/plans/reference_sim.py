@@ -46,6 +46,10 @@ import pandas as pd
 from ..config import CrawlConfig
 from ..functions import core
 
+# fetch order, fixed in the reference CLI (cli/config.go:79) and hardcoded
+# in CrawlEngine's first-success derivation
+_PROTOCOLS = ("https", "http")
+
 _REASON = {200: "OK", 301: "Moved Permanently", 404: "Not Found",
            500: "Internal Server Error", 204: "No Content"}
 
@@ -210,7 +214,7 @@ class ReferenceSimulator:
                 page_novel: list[str] = []
                 title = ""
                 code = None
-                for proto in cfg.protocols:
+                for proto in _PROTOCOLS:
                     entry = self.corpus.get(host)
                     ok = entry is not None and proto in entry[0]
                     err = None if ok else "connection refused"

@@ -2,7 +2,7 @@
 
 The reference's seen-set is a mutable in-process bloom filter
 (/root/reference/pkg/infrastructure/storage/bloom_filter.go); the batch
-engine replays it as an anti-join + broadcast bloom bank (operators/seen.py).
+engine replays it as an exact anti-join against the cumulative seen table.
 This module is the STREAMING form: a continuous candidate stream is deduped
 against state that persists across micro-batches and restarts — the
 ``applyInPandasWithState`` custom-stateful-operator pattern from the brief.
@@ -14,7 +14,7 @@ Shape:
 
 * State is partitioned by a hash shard key, NOT by host: state rows stay
   bounded (S entries) and each shard's set grows with its share of the
-  keyspace — the same sharding the broadcast bloom bank uses.
+  keyspace.
 * Within a micro-batch the operator also dedups batch-internal repeats
   (first occurrence wins, like D2).
 * Two state representations, selected by ``state_mode``:

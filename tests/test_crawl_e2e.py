@@ -2,8 +2,9 @@
 
 SURVEY.md §5.3: (a) exact seen-set equality, (b) per-round frontier-set
 equality under synchronized-BFS, (c) result rows match after canonical sort,
-(d) per-round metrics equality. Run twice: with and without the bloom
-pre-filter, which must never change results (SURVEY.md §7 "exact-vs-bloom").
+(d) per-round metrics equality. The engine's seen set has one regime, the
+exact ``left_anti`` against the cumulative seen table, so one crawl of the
+fixture web serves every check in this module.
 """
 
 from __future__ import annotations
@@ -31,12 +32,11 @@ def _sim(fixture_web, cfg):
         fixture_web["seeds"], max_rounds=10)
 
 
-@pytest.fixture(scope="module", params=[False, True], ids=["exact", "bloom"])
-def crawl_pair(request, spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(use_bloom_prefilter=request.param, honor_robots=False,
-                      bloom_min_seen=0)  # force the bank on at fixture scale
+@pytest.fixture(scope="module")
+def crawl_pair(spark, fixture_web, tmp_path_factory):
+    cfg = CrawlConfig(honor_robots=False)
     eng, stats = _run_engine(spark, fixture_web,
-                             tmp_path_factory.mktemp(f"run{request.param}"), cfg)
+                             tmp_path_factory.mktemp("run"), cfg)
     sim = _sim(fixture_web, cfg)
     return eng, stats, sim
 
@@ -127,7 +127,7 @@ def test_giant_regime_crawl_equivalence(spark, fixture_web, tmp_path,
     base = fixture_web["base"]
     corpus = spark.read.parquet(f"{base}/corpus.parquet").repartition(width)
     dns = spark.read.parquet(f"{base}/dns.parquet").repartition(width)
-    cfg = CrawlConfig(honor_robots=False, use_bloom_prefilter=False)
+    cfg = CrawlConfig(honor_robots=False)
     eng = CrawlEngine(spark, cfg, str(tmp_path / "crawl"), corpus, dns)
     assert eng.corpus_meta.is_cached and eng.corpus_text.is_cached
     assert eng.dns.is_cached

@@ -1,12 +1,16 @@
 """Configuration lives in CrawlConfig: no library module may read a
-``SPARK_GRAFT_*`` environment variable (source text scan, no Spark).
-Deployment paths such as ``SPARK_HOME`` stay allowed."""
+``SPARK_GRAFT_*`` environment variable, and every CrawlConfig field must be
+read somewhere in the library (source text scans, no Spark). Deployment
+paths such as ``SPARK_HOME`` stay allowed."""
 
 from __future__ import annotations
 
+import dataclasses
 import pathlib
+import re
 
 import subdomain_crawler_spark
+from subdomain_crawler_spark.config import CrawlConfig
 
 PKG = pathlib.Path(subdomain_crawler_spark.__file__).parent
 
@@ -17,3 +21,12 @@ def test_library_reads_no_spark_graft_env():
             for i, line in enumerate(path.read_text().splitlines(), 1)
             if "SPARK_GRAFT_" in line]
     assert not hits, "SPARK_GRAFT_* in library code:\n" + "\n".join(hits)
+
+
+def test_every_crawlconfig_field_is_read():
+    """A field no module outside config.py names is a knob with no effect."""
+    text = "\n".join(path.read_text() for path in sorted(PKG.rglob("*.py"))
+                     if path != PKG / "config.py")
+    unread = [f.name for f in dataclasses.fields(CrawlConfig)
+              if not re.search(rf"\b{f.name}\b", text)]
+    assert not unread, f"CrawlConfig fields read by no library module: {unread}"

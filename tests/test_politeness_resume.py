@@ -27,7 +27,7 @@ def _mk_engine(spark, fixture_web, workdir, cfg, with_robots):
 
 @pytest.fixture(scope="module")
 def polite_pair(spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=True, use_bloom_prefilter=False)
+    cfg = CrawlConfig(honor_robots=True)
     eng = _mk_engine(spark, fixture_web, str(tmp_path_factory.mktemp("pol")),
                      cfg, with_robots=True)
     stats = eng.run(seeds=fixture_web["seeds"], max_rounds=24)
@@ -46,7 +46,7 @@ def test_politeness_changes_schedule(polite_pair, crawl_ref_rounds):
 
 @pytest.fixture(scope="module")
 def crawl_ref_rounds(spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=False, use_bloom_prefilter=False)
+    cfg = CrawlConfig(honor_robots=False)
     t = fixture_web["tables"]
     sim = ReferenceSimulator(t["corpus"], t["dns"], cfg).run(
         fixture_web["seeds"], max_rounds=24)
@@ -165,7 +165,7 @@ def _assert_states_equal(a, b):
 
 
 def test_resume_equals_uninterrupted(spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=False, use_bloom_prefilter=False)
+    cfg = CrawlConfig(honor_robots=False)
     # uninterrupted
     full = _mk_engine(spark, fixture_web,
                       str(tmp_path_factory.mktemp("full")), cfg, False)
@@ -190,7 +190,7 @@ def test_resume_recovers_from_crash_mid_round(spark, fixture_web,
     """Simulate a crash between a round's table writes and its manifest
     commit: rewind the manifest; the rerun must overwrite the orphan dirs and
     converge to the identical final state."""
-    cfg = CrawlConfig(honor_robots=False, use_bloom_prefilter=False)
+    cfg = CrawlConfig(honor_robots=False)
     wd = str(tmp_path_factory.mktemp("crash"))
     a = _mk_engine(spark, fixture_web, wd, cfg, False)
     a.run(seeds=fixture_web["seeds"], max_rounds=3)
