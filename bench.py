@@ -8,9 +8,12 @@ Output: {"metric": ..., "value": <total sec>, "unit": "sec",
          "queries": {name: sec, ...}, "sf": <float>,
          "crawl": {urls_per_sec, subdomains_per_sec, ...}}
 
-Scaling-efficiency evidence (north rule: N vs 4N) is produced by
-``python bench.py --scaling`` which runs the same crawl at local[8] and
-local[32] in separate JVMs and writes BENCH/BASELINE.md — see that file.
+Scaling-efficiency evidence (north rule: N vs 4N) is the warm-JVM pair
+``python bench.py --scaling-warm``: the same crawl at local[1] and
+local[4] (``SPARK_GRAFT_SCALING_LEVELS``), one JVM per level. It prints a
+JSON report with the N→4N efficiencies; ``--scaling`` is the interleaved
+fresh-JVM variant (local[8] and local[32]) and prints the same kind of
+report. Neither writes BENCH/BASELINE.md, which records the measured runs.
 """
 
 from __future__ import annotations
@@ -238,20 +241,6 @@ def _crawl_over(spark, base: str, seeds, label: dict) -> dict:
         }
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
-
-
-def run_crawl(spark, scale: int) -> dict:
-    """Small correctness-shaped crawl (image corpus) for the per-round bench."""
-    from subdomain_crawler_spark.sources import fixtures
-
-    base = tempfile.mkdtemp(prefix="crawl_bench_")
-    try:
-        tables = fixtures.make_web(scale=scale, seed=42)
-        fixtures.write_parquet(tables, base)
-        return _crawl_over(spark, base, list(tables["seeds"]["seed"]),
-                           {"scale": scale})
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def scaling_web_dir(n_roots: int, hosts_per_root: int, bloat: int) -> str:

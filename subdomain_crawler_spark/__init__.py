@@ -19,9 +19,10 @@ snapshot-committed parquet tables:
 Layout:
     functions/  pure-python vectorized kernels + pandas_udf wrappers
     operators/  dedup / similarity / seen-set / politeness / first-success
-    sources/    table IO seam (parquet+manifest snapshots), fixtures, seeds
+    sources/    table IO seam (parquet+manifest snapshots), fixtures, JSONL
     plans/      the rounds-loop crawl engine
-    streaming/  micro-batch wrapper (the crawl itself is terminating BFS)
+    streaming/  watermarked event-time rates (the crawl itself is
+                iterative batch: seeds enter only through CrawlEngine.start)
 """
 
 __version__ = "0.1.0"

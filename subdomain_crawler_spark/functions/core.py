@@ -369,9 +369,3 @@ def expand_domain_one(domain: str, prefixes: list[str] | None = None) -> list[st
         return [domain]
     ps = prefixes if prefixes is not None else merged_prefixes()
     return [domain] + [f"{p}.{domain}" for p in ps]
-
-
-def expand_domains(domains: pd.Series, prefixes: list[str] | None = None) -> pd.Series:
-    ps = prefixes if prefixes is not None else merged_prefixes()
-    uniq = {d: expand_domain_one(d, ps) for d in pd.unique(canonicalize(domains).dropna())}
-    return canonicalize(domains).map(uniq)

@@ -57,11 +57,6 @@ def udf_page_features(texts: pd.Series, roots: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"cands": cands, "title": core.extract_title(texts)})
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def udf_expand_domain(seeds: pd.Series) -> pd.Series:
-    return core.expand_domains(seeds)
-
-
 # --- text-analysis / sketch UDFs (training-data ops) -----------------------
 # NOTE: token_count / quality_score / lang_id have NO udf wrappers on purpose:
 # their production paths are pure-JVM expressions (plans/driver_queries.py);

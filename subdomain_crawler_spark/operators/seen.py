@@ -16,10 +16,11 @@ side of ``SortMergeJoin [cand], [host], LeftAnti`` carries a
 ``might_contain`` filter, even with the rule's size thresholds forced to 0;
 the rule only injects filters into the fetch-join's joins on ``host``.
 
-The bloom filter here backs the streaming dedup's constant-memory
-``state_mode="bloom"`` (streaming/dedup.py), where a false-positive drop is
-the accepted trade. All probe/add paths are numpy-vectorized over pandas
-batches.
+The bloom filter here backs only the sharded bank below, which no engine
+path calls; the bank stays because perfbench's tracer wraps
+``build_bank_distributed`` by name (see the note above
+``ShardedSeenFilter``). All probe/add paths are numpy-vectorized over
+pandas batches.
 """
 
 from __future__ import annotations
@@ -40,9 +41,7 @@ def fnv64(values: pd.Series | list[str]) -> np.ndarray:
 
     Vectorized by byte POSITION: hostnames are short (≲64 bytes), so the
     whole Arrow batch folds in maxlen vectorized uint64 passes instead of a
-    per-string per-byte Python loop — this runs on every micro-batch of the
-    streaming ``state_mode="bloom"`` dedup, so it must be C-speed (same
-    values as the scalar FNV-1a)."""
+    per-string per-byte Python loop (same values as the scalar FNV-1a)."""
     arr = values.to_numpy() if isinstance(values, pd.Series) else values
     from ..functions.text import padded_bytes
 
@@ -98,15 +97,6 @@ class BloomFilter:
         byte = self.bits[(pos >> 3).astype(np.int64)]
         bit = (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1
         return bit.all(axis=1)
-
-    def add(self, values: pd.Series) -> None:
-        if len(values):
-            self.add_hashes(fnv64(values))
-
-    def contains(self, values: pd.Series) -> np.ndarray:
-        if not len(values):
-            return np.zeros(0, dtype=bool)
-        return self.contains_hashes(fnv64(values))
 
     def union(self, other: "BloomFilter") -> "BloomFilter":
         assert (self.num_bits, self.num_hashes) == (other.num_bits, other.num_hashes)

@@ -38,9 +38,10 @@ Scale notes (10^10-URL frontier, 1000 executors):
 
 from __future__ import annotations
 
+import json
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -517,6 +518,8 @@ class CrawlEngine:
         if rnd == 0:
             assert seeds is not None, "fresh run needs seeds"
             self.start(seeds)
+        else:
+            self._check_resume_config()
         stats: list[RoundStats] = []
         n: int | None = None  # carried forward from the frontier write's
         # observation — no per-round count() job after round 0
@@ -543,6 +546,22 @@ class CrawlEngine:
         return stats
 
     # -- internals ------------------------------------------------------------
+
+    def _check_resume_config(self) -> None:
+        """Refuse to resume under a CrawlConfig other than the one every
+        committed round recorded: the later rounds would silently run under
+        a second config. A manifest without a recorded config (committed by
+        an engine that did not record one) is not checked."""
+        recorded = self.io.manifest().get("config")
+        current = json.loads(json.dumps(asdict(self.cfg)))
+        if recorded is None or recorded == current:
+            return
+        diff = [f"{k} (recorded {recorded.get(k)!r}, given {current.get(k)!r})"
+                for k in sorted(recorded.keys() | current.keys())
+                if recorded.get(k) != current.get(k)]
+        raise ValueError("resume CrawlConfig differs from the one the "
+                         "committed rounds ran under, in fields "
+                         + ", ".join(diff))
 
     @staticmethod
     def _dedup_frontier(df: DataFrame) -> DataFrame:
@@ -919,7 +938,7 @@ class CrawlEngine:
                            if obs_pre is not None else 0),
         )
         self.io.append_local("metrics", pd.DataFrame([st.__dict__]), rnd)
-        self.io.commit_round(rnd)
+        self.io.commit_round(rnd, {"config": asdict(cfg)})
 
         for df in (frontier, j, pages, winner):
             df.unpersist()

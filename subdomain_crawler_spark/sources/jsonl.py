@@ -31,6 +31,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.crawl import _status_expr
+
 # reference field order (entity/domain.go:21-29); Spark's JSON writer emits
 # keys in column order and drops nulls (ignoreNullFields default true) —
 # which reproduces Go's omitempty exactly
@@ -121,7 +123,7 @@ def export_http_jsonl(http_log: DataFrame, path: str,
     response = F.when(responded, F.struct(
         F.lit("HTTP/1.1").alias("proto"),
         F.col("status_code").alias("status_code"),
-        _status_line_expr(F.col("status_code")).alias("status"),
+        _status_expr(F.col("status_code")).alias("status"),
         resp_header.alias("header"),
         body.alias("body"),
         F.length(body).cast("long").alias("content_length"),
@@ -184,12 +186,6 @@ def export_dns_jsonl(dns_log: DataFrame, path: str) -> None:
     _write_single(out, path, keep_nulls=True)
 
 
-def _status_line_expr(code_col):
-    from ..plans.crawl import _status_expr
-
-    return _status_expr(code_col)
-
-
 def export_results_jsonl(results: DataFrame, path: str,
                          epoch: float | None = None,
                          single_file: bool = True) -> None:
@@ -206,14 +202,4 @@ def export_results_jsonl(results: DataFrame, path: str,
     if not single_file:
         out.write.mode("overwrite").json(path)
         return
-    tmp = tempfile.mkdtemp(prefix="jsonl_export_")
-    try:
-        out.coalesce(1).write.mode("overwrite").json(tmp)
-        part = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        if part:
-            shutil.move(part[0], path)
-        else:  # zero-row result set still produces a valid (empty) file
-            open(path, "w").close()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    _write_single(out, path)

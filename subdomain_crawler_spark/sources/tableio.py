@@ -9,7 +9,7 @@ only talks to this interface.
 
 Layout:
     base/<table>/round=<N>/*.parquet      one atomic append per round
-    base/_manifest.json                   {"committed_round": N, "tables": [...]}
+    base/_manifest.json                   {"committed_round": N, "config": {...}}
 
 Commit protocol (single-writer, the driver loop): write every table's
 ``round=N`` directory, then rename ``_manifest.json.tmp`` → ``_manifest.json``.

@@ -206,3 +206,24 @@ def test_resume_recovers_from_crash_mid_round(spark, fixture_web,
     full_stats = full.run(seeds=fixture_web["seeds"], max_rounds=24)
     n = len(full_stats)
     _assert_states_equal(_final_state(full, n), _final_state(b, n))
+
+
+def test_resume_refuses_changed_config(spark, fixture_web, tmp_path_factory):
+    """Each commit records the CrawlConfig; a resume under a different one
+    fails loudly, names the field and runs nothing, while the same config
+    (tuple fields included, after the manifest's JSON round-trip) resumes."""
+    cfg = CrawlConfig(honor_robots=False)
+    wd = str(tmp_path_factory.mktemp("cfg"))
+    a = _mk_engine(spark, fixture_web, wd, cfg, False)
+    a.run(seeds=fixture_web["seeds"], max_rounds=1)
+
+    b = _mk_engine(spark, fixture_web, wd,
+                   CrawlConfig(honor_robots=False, max_depth=1), False)
+    with pytest.raises(ValueError) as err:
+        b.run(seeds=None, max_rounds=24)
+    assert "max_depth (recorded 3, given 1)" in str(err.value)
+    assert "honor_robots" not in str(err.value)
+    assert b.io.committed_round() == 0
+
+    c = _mk_engine(spark, fixture_web, wd, cfg, False)
+    assert [st.round for st in c.run(seeds=None, max_rounds=2)] == [1]
