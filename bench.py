@@ -10,10 +10,10 @@ Output: {"metric": ..., "value": <total sec>, "unit": "sec",
 
 Scaling-efficiency evidence (north rule: N vs 4N) is the warm-JVM pair
 ``python bench.py --scaling-warm``: the same crawl at local[1] and
-local[4] (``SPARK_GRAFT_SCALING_LEVELS``), one JVM per level. It prints a
-JSON report with the N→4N efficiencies; ``--scaling`` is the interleaved
-fresh-JVM variant (local[8] and local[32]) and prints the same kind of
-report. Neither writes BENCH/BASELINE.md, which records the measured runs.
+local[4] (``SPARK_GRAFT_SCALING_LEVELS``), one JVM per level, each
+pinned to its N cores. It prints a JSON report with the N→4N
+efficiencies and does not write BENCH/BASELINE.md, which records the
+measured runs.
 """
 
 from __future__ import annotations
@@ -318,83 +318,6 @@ def main() -> None:
     }))
 
 
-def scaling() -> None:
-    """N-vs-4N scaling evidence (north rule): run the SAME crawl at multiple
-    parallelism levels over identical cached input, trials INTERLEAVED
-    round-robin across levels — every level samples every host-noise window,
-    so a quiet hour cannot flatter one level (round-2 review asked for
-    paired trials; min AND median are reported per level).
-
-    Each trial runs in a FRESH subprocess (own JVM + Python): reusing one
-    Python process across spark.stop()/getOrCreate poisons later sessions
-    (the stopped context's Python-accumulator server leaks into the next —
-    thousands of broken-pipe/EOF errors and 2-10× wall inflation, observed
-    on this box). Separate processes also match the real N-vs-4N protocol:
-    two independently-launched clusters."""
-    import statistics
-    import subprocess
-
-    n_roots = int(os.environ.get("SPARK_GRAFT_SCALING_ROOTS", "12000"))
-    hpr = int(os.environ.get("SPARK_GRAFT_SCALING_HPR", "24"))
-    bloat = int(os.environ.get("SPARK_GRAFT_SCALING_BLOAT", "500"))
-    trials = int(os.environ.get("SPARK_GRAFT_SCALING_TRIALS", "3"))
-    levels = tuple(int(x) for x in os.environ.get(
-        "SPARK_GRAFT_SCALING_LEVELS", "8,32").split(","))
-    scaling_web_dir(n_roots, hpr, bloat)  # pre-generate once (pyarrow-only)
-    walls: dict[int, list[float]] = {c: [] for c in levels}
-    fronts: dict[int, set[int]] = {c: set() for c in levels}
-    for t in range(trials):
-        for cpus in levels:  # interleaved: one trial per level per sweep
-            env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-                       SPARK_GRAFT_SCALING_ROOTS=str(n_roots),
-                       SPARK_GRAFT_SCALING_HPR=str(hpr),
-                       SPARK_GRAFT_SCALING_BLOAT=str(bloat),
-                       SPARK_GRAFT_MAX_ROUNDS=os.environ.get(
-                           "SPARK_GRAFT_MAX_ROUNDS", "3"))
-            proc = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--scaling-one"],
-                env=env, capture_output=True, text=True, check=True)
-            out = json.loads(proc.stdout.strip().splitlines()[-1])
-            walls[cpus].append(out["wall_sec"])
-            fronts[cpus].add(out["frontier_urls"])
-            print(f"  sweep {t} local[{cpus}]: {out['wall_sec']}s",
-                  file=sys.stderr, flush=True)
-    # throughput numerator must be IDENTICAL work at every level — a
-    # level-dependent frontier (nondeterminism or a parallelism bug) would
-    # silently corrupt the efficiency numbers
-    all_fronts = set().union(*fronts.values())
-    if len(all_fronts) != 1:  # explicit raise: survives `python -O`
-        raise RuntimeError(f"frontier_urls differ across trials: {fronts}")
-    frontier_urls = all_fronts.pop()
-    results = {}
-    for cpus in levels:
-        w = walls[cpus]
-        results[cpus] = {
-            "walls": w, "wall_min": min(w),
-            "wall_median": round(statistics.median(w), 2),
-            "frontier_urls": frontier_urls,
-            "urls_per_sec_min": round(frontier_urls / min(w), 1),
-            "urls_per_sec_median": round(
-                frontier_urls / statistics.median(w), 1),
-        }
-    report = {
-        "corpus": f"{n_roots} roots x {hpr} hosts, {bloat}-word captions",
-        "protocol": (f"{trials} interleaved sweeps, fresh subprocess per "
-                     f"trial, process tree pinned to N cores"
-                     if os.environ.get("SPARK_GRAFT_SCALING_PIN", "1") == "1"
-                     else f"{trials} interleaved sweeps, fresh subprocess "
-                          f"per trial, UNPINNED (legacy)"),
-        **{f"local{c}": results[c] for c in levels},
-    }
-    for a in levels:
-        if a * 4 in results:  # every N → 4N pair measured
-            for est in ("min", "median"):
-                report[f"eff_{a}_to_{a*4}_{est}"] = round(
-                    results[a * 4][f"urls_per_sec_{est}"]
-                    / results[a][f"urls_per_sec_{est}"] / 4, 3)
-    print(json.dumps(report, indent=2))
-
-
 def scaling_warm() -> None:
     """Warm-JVM supplementary protocol (round-4 review ask): ONE JVM per
     level runs 1 warmup + T timed crawls over identical cached input.
@@ -405,8 +328,14 @@ def scaling_warm() -> None:
     is actually about.  Run 0 is ALSO reported — it is exactly one
     fresh-protocol sample, so a single pass yields both protocols' numbers.
     Levels run sequentially (a warm JVM cannot be interleaved across noise
-    windows); the interleaved fresh protocol (--scaling) remains available
-    and the report says which produced each figure."""
+    windows).
+
+    Each level runs in a FRESH subprocess (own JVM + Python): reusing one
+    Python process across spark.stop()/getOrCreate poisons later sessions
+    (the stopped context's Python-accumulator server leaks into the next —
+    thousands of broken-pipe/EOF errors and 2-10× wall inflation).
+    Separate processes also match the real N-vs-4N protocol: two
+    independently-launched clusters."""
     import statistics
 
     n_roots = int(os.environ.get("SPARK_GRAFT_SCALING_ROOTS", "12000"))
@@ -445,17 +374,18 @@ def scaling_warm() -> None:
         }
         print(f"  local[{cpus}]: fresh {walls[0]}s, warm {warm}",
               file=sys.stderr, flush=True)
-    if len(fronts) != 1:  # identical-work invariant (see scaling())
+    # throughput numerator must be IDENTICAL work at every level — a
+    # level-dependent frontier (nondeterminism or a parallelism bug) would
+    # silently corrupt the efficiency numbers
+    if len(fronts) != 1:  # explicit raise: survives `python -O`
         raise RuntimeError(f"frontier_urls differ across runs: {fronts}")
     frontier_urls = fronts.pop()
     report = {
         "corpus": f"{n_roots} roots x {hpr} hosts, {bloat}-word captions",
         "protocol": (f"warm-JVM: one subprocess per level, 1 warmup + "
                      f"{trials} timed runs; run 0 doubles as a fresh-JVM "
-                     f"sample; levels sequential; "
-                     + ("process tree pinned to N cores"
-                        if os.environ.get("SPARK_GRAFT_SCALING_PIN", "1")
-                        == "1" else "UNPINNED (legacy)")),
+                     f"sample; levels sequential; process tree pinned to "
+                     f"N cores"),
         "frontier_urls": frontier_urls,
         **{f"local{c}": per_level[c] for c in levels},
     }
@@ -558,12 +488,10 @@ def scaling_one() -> None:
     # and thus the measured N→4N efficiency. A real N-core-executor
     # cluster gives those threads N cores too. sched_setaffinity is
     # inherited by the JVM and every Python worker it forks.
-    # SPARK_GRAFT_SCALING_PIN=0 restores the unpinned legacy protocol.
-    if os.environ.get("SPARK_GRAFT_SCALING_PIN", "1") == "1":
-        try:
-            os.sched_setaffinity(0, set(range(cpus)))
-        except (AttributeError, OSError):
-            pass  # non-Linux: unpinned legacy behavior
+    try:
+        os.sched_setaffinity(0, set(range(cpus)))
+    except (AttributeError, OSError):
+        pass  # non-Linux: no affinity API, runs unpinned
     # Measured auto-tune (BENCH/BASELINE.md §2a): this box's memory bus
     # saturates at ~8 concurrent heavy tasks, and past saturation extra
     # concurrency actively hurts (128 -> 84 s min on the 9.5 M corpus).
@@ -581,15 +509,13 @@ def scaling_one() -> None:
     spark = build_spark(cpus)
     outs = [run_scaling_crawl(spark, cpus) for _ in range(runs)]
     spark.stop()
-    # single-run prints the bare dict (the fresh protocol's parser);
-    # multi-run wraps them for the warm protocol
+    # single-run prints the bare dict; multi-run wraps them for the warm
+    # protocol
     print(json.dumps(outs[0] if runs == 1 else {"runs": outs}))
 
 
 if __name__ == "__main__":
-    if "--scaling" in sys.argv:
-        scaling()
-    elif "--scaling-warm" in sys.argv:
+    if "--scaling-warm" in sys.argv:
         scaling_warm()
     elif "--scaling-one" in sys.argv:
         scaling_one()

@@ -116,13 +116,14 @@ def connected_components(
     node id of its connected component.
 
     ``pairs`` columns ``src``/``dst`` must be an ORDERABLE id type —
-    numeric (the cheap shuffle key; every query-path caller) or string
-    (lexicographic min labels; the engine's image_id path — both the
-    driver union-find's ``<`` and the distributed path's ``min()``
-    aggregate are type-agnostic over orderable columns).  Returns DataFrame(id, label) covering every node that appears
-    in at least one pair (singletons never enter the graph — the caller
-    decides their representation, matching the LSH pipeline where a
-    pairless doc is its own group).  The result is backed by a
+    numeric (the cheap shuffle key; every library caller packs its ids
+    into int64) or string (lexicographic min labels, pinned by
+    tests/test_components.py — both the driver union-find's ``<`` and the
+    distributed path's ``min()`` aggregate are type-agnostic over
+    orderable columns).  Returns DataFrame(id, label) covering every node
+    that appears in at least one pair (singletons never enter the graph —
+    the caller decides their representation, matching the LSH pipeline
+    where a pairless doc is its own group).  The result is backed by a
     ``localCheckpoint`` — materialized, lineage-free; its blocks are
     released when the caller drops the reference (or eagerly via
     ``free_checkpoint_blocks``).
@@ -133,9 +134,9 @@ def connected_components(
     results are bit-identical (union-by-min roots ARE component minima),
     and the memory bound is explicit: the edges cross as TWO Arrow
     columns (toPandas — no driver Row objects), ≤ 2·threshold rows
-    ≈ 8 MB at the default for int64 ids — for STRING ids (the engine's
-    image_id path) per-row cost is id-width-bound instead, ~8 MB per 16
-    average id bytes at the default threshold — and the transient
+    ≈ 8 MB at the default for int64 ids — for STRING ids per-row cost is
+    id-width-bound instead, ~8 MB per 16 average id bytes at the default
+    threshold — and the transient
     Python-object peak (edge tuples + the parent dict over ≤ 2·threshold
     distinct nodes) is ~100-150 MB for int64, proportionally more for
     long string ids; callers with wide ids should size

@@ -410,108 +410,6 @@ class CrawlEngine:
         """Next round to run: 0 on a fresh dir, committed+1 after a crash/stop."""
         return self.io.committed_round() + 1
 
-    def dedup_documents(self, docs: DataFrame,
-                        bucket_cap: int = 10_000) -> DataFrame:
-        """Production near-dup pass over a (doc_id, text) corpus run as
-        part of a crawl workflow (e.g. deduping fetched pages before
-        export): the composed fingerprint→LSH→CC pipeline from
-        plans/driver_queries.dedup_pipeline_run, with its star-expansion
-        cap telemetry appended to this engine's checkpoint as the
-        ``dedup_metrics`` table (same schema as q_lsh_cap_stats) under
-        the round the dedup ran after — the telemetry rides the
-        pipeline's own action, so recording it costs ZERO extra scans
-        (closes the round-6→8 ask chain: the Observation existed but no
-        engine path persisted it)."""
-        from .driver_queries import dedup_pipeline_run
-
-        labels, metrics = dedup_pipeline_run(docs, bucket_cap=bucket_cap)
-        rnd = max(self.io.committed_round(), 0)
-        self.io.append_local(
-            "dedup_metrics",
-            pd.DataFrame([{k: int(metrics[k]) for k in
-                           ("bucket_cap", "capped_buckets",
-                            "star_edges", "dropped_pairs")}]),
-            rnd)
-        return labels
-
-    def dedup_images(self, imgs: DataFrame,
-                     bucket_cap: int | None = None) -> DataFrame:
-        """Production image near-dup pass over an input_hint-shaped corpus
-        slice ``imgs(image_id, phash, ...)`` run as part of a crawl
-        workflow — the multimodal twin of dedup_documents: phash MIH band
-        join (driver_queries._img_band_pairs — optionally hot-bucket
-        capped; the cap telemetry Observation rides the edge
-        materialization inside connected_components, zero extra scans) →
-        the shared CC operator (string image_ids: lexicographic min
-        labels) → (image_id, group_id) for EVERY input image, singletons
-        their own group.  Telemetry lands in the checkpoint's
-        ``img_dedup_metrics`` table (same schema as q_lsh_cap_stats;
-        all-zero cap fields when uncapped)."""
-        from pyspark.sql import Observation
-
-        from ..operators.components import connected_components, \
-            free_checkpoint_blocks
-        from .driver_queries import _img_band_pairs
-
-        obs = Observation() if bucket_cap is not None else None
-        ids = imgs.select("image_id", "phash")
-        pairs = _img_band_pairs(ids, bucket_cap=bucket_cap, observer=obs)
-        labels = connected_components(
-            pairs.select(F.col("left_id").alias("a"),
-                         F.col("right_id").alias("b")))
-        out = (ids.select("image_id")
-               .join(labels, ids["image_id"] == labels["id"], "left")
-               .select("image_id",
-                       F.coalesce("label", "image_id").alias("group_id"))
-               .localCheckpoint(eager=True))
-        free_checkpoint_blocks(labels)
-        got = {"capped_buckets": 0, "star_edges": 0, "dropped_pairs": 0}
-        if obs is not None:
-            try:
-                got = obs.get
-            except Exception:  # metrics node pruned (empty overflow graph)
-                pass
-        rnd = max(self.io.committed_round(), 0)
-        self.io.append_local(
-            "img_dedup_metrics",
-            pd.DataFrame([{"bucket_cap": int(bucket_cap or 0),
-                           "capped_buckets": int(got["capped_buckets"] or 0),
-                           "star_edges": int(got["star_edges"] or 0),
-                           "dropped_pairs": int(got["dropped_pairs"] or 0)}]),
-            rnd)
-        return out
-
-    def quality_filter_documents(self, docs: DataFrame,
-                                 export_table: str = "kept_documents",
-                                 ) -> dict[str, int]:
-        """Production quality-gate pass over a (doc_id, text, ...) corpus
-        run as part of a crawl workflow: filter fetched pages through the
-        composed first-failing-rule gate (driver_queries.
-        quality_filter_verdict — the SAME expressions the hash-green
-        quality_filter oracle certifies), export the surviving rows to
-        ``export_table`` under the current round, and record the
-        per-reason rejection counts to the checkpoint's
-        ``quality_metrics`` table.  The counts ride the export write's
-        own Observation — the observe node sits BELOW the keep filter, so
-        every row (kept and rejected) flows through it during the one
-        write action: ZERO extra scans (the A1 counters-riding-writes
-        pattern).  Returns the per-reason counts."""
-        from pyspark.sql import Observation
-
-        from .driver_queries import QF_REASONS, quality_filter_verdict
-
-        obs = Observation()
-        v = quality_filter_verdict(docs).observe(
-            obs, *[F.coalesce(F.sum((F.col("reason") == r).cast("long")),
-                              F.lit(0)).alias(r) for r in QF_REASONS])
-        kept = v.filter(F.col("keep")).drop("reason", "keep")
-        rnd = max(self.io.committed_round(), 0)
-        self.io.append(export_table, kept, rnd)  # the ONE action
-        got = obs.get
-        counts = {r: int(got[r] or 0) for r in QF_REASONS}
-        self.io.append_local("quality_metrics", pd.DataFrame([counts]), rnd)
-        return counts
-
     def run(self, seeds: list[str] | DataFrame | None = None,
             max_rounds: int = 64, progress=None) -> list[RoundStats]:
         rnd = self.resume_round()

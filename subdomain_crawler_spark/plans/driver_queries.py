@@ -611,17 +611,12 @@ _QF_MIN_QUALITY = 0.02  # min en-stopword ratio (C4-style heuristic)
 _QF_MAX_REP = 0.05     # max duplicate-3-gram fraction (Rae et al. §A1.1)
 
 
-# first-failing-rule verdicts in gate order (duplicate wins over language
-# over length …) + the keep verdict — the quality_metrics schema
-QF_REASONS = ("duplicate", "non_english", "too_short", "low_quality",
-              "repetitive", "kept")
-
-
 def quality_filter_verdict(d: DataFrame) -> DataFrame:
     """The composed quality gate as a library call over ``d(doc_id, text,
-    ...)``: returns ALL input columns plus ``reason`` (first failing rule,
-    QF_REASONS order) and ``keep`` — so an engine caller can filter and
-    export the surviving rows without a second scan or re-join.  Helper
+    ...)``: returns ALL input columns plus ``reason`` (the first failing
+    rule in gate order: duplicate → non_english → too_short →
+    low_quality → repetitive, else kept) and ``keep`` — so a caller can
+    filter the surviving rows without a second scan or re-join.  Helper
     columns are underscore-prefixed and dropped (no collision with caller
     columns).  Every gate is a per-row JVM expression in one
     whole-stage-codegen pass; the only shuffle is the dup-keeper window's
@@ -650,7 +645,7 @@ def quality_filter_verdict(d: DataFrame) -> DataFrame:
         return F.size(F.filter(toks, lambda t: t.isin(sw)))
 
     cols = list(d.columns)
-    # engine callers pass arbitrary corpus slices — a caller frame already
+    # callers may pass arbitrary corpus slices — a caller frame already
     # carrying an output or helper name would produce duplicate/ambiguous
     # columns downstream (round-10 ADVICE); fail loudly instead
     reserved = ({"reason", "keep", "_key", "_n_tokens", "_quality",
@@ -699,9 +694,8 @@ def q_quality_filter(spark, sf_dir):
     expression in one whole-stage-codegen pass over the scan; the only
     shuffle is the dedup window's hash partition by key (the same shuffle
     dedup_exact pays), after which the verdict expression is free.
-    The expressions live in quality_filter_verdict — the engine's
-    CrawlEngine.quality_filter_documents runs the SAME composition, so
-    this oracle row certifies the production path too."""
+    The expressions live in quality_filter_verdict, the library form of
+    this gate over any (doc_id, text, ...) frame."""
     d = _t(spark, sf_dir, "documents")
     return (quality_filter_verdict(d.select("doc_id", "text"))
             .select("doc_id", "reason", "keep"))
@@ -995,22 +989,13 @@ ORDER BY cos_sim DESC, vec_id LIMIT 5
 # accumulates f32 products in double; DuckDB's list_inner_product runs at
 # the list's FLOAT precision, so a ~1e-6 discrepancy straddling a 4th-
 # decimal boundary could still flip an argmax). Green at every tested SF;
-# WITHIN Spark the two cell-assignment paths below are bit-equal by
-# construction (the Arrow kernel emulates the literal path's arithmetic
-# exactly — see _ivf_scores_np).
+# WITHIN Spark the Arrow cell assignment below is bit-equal to an argmax
+# over the `_cos4` expression (the kernel emulates its arithmetic exactly
+# — see _ivf_scores_np).
 
 _IVF_K = 16        # centroid count (vec_id 1.._IVF_K)
 _IVF_NPROBE = 4    # cells searched per query
 _IVF_TOPK = 10
-# Historical literal-vs-Arrow threshold (rounds 8-10 switched assignment
-# paths on k; round 11 made Arrow the default at EVERY k after measuring
-# the literal path at 9.5 s vs 0.9 s warm on sf1.0 — the literal
-# transform's PLAN is constant-size at any k, but its EVALUATION is
-# interpreted higher-order-function lambdas (zip_with / aggregate are not
-# codegen'd — every element is boxed), i.e. k·d boxed JVM ops per row,
-# while the Arrow kernel does the same flops as vectorized numpy over the
-# batch).  Kept as documentation + the explicit use_arrow=False escape.
-_IVF_LITERAL_MAX_K = 32
 
 
 def _cos4(vec_col, other):
@@ -1043,11 +1028,11 @@ _udf_pair_cos4 = udfs.udf_pair_cos4
 
 
 def _ivf_cells_arrow(vectors, cents, cids, vec_col: str = "embedding"):
-    """Arrow-batched cell assignment — the large-k production path: one
-    pandas UDF over a broadcast (closure-captured) centroid matrix, argmax
-    with first-max-wins (= smallest centroid position = the literal path's
-    ``array_position(scores, array_max(scores))`` tie rule). Constant-size
-    plan at any k; per-batch work is one vectorized score matrix + argmax."""
+    """Arrow-batched cell assignment: one pandas UDF over a broadcast
+    (closure-captured) centroid matrix, argmax with first-max-wins
+    (= smallest centroid position = smallest cid, the oracle's tie rule).
+    Constant-size plan at any k; per-batch work is one vectorized score
+    matrix + argmax."""
     import numpy as np
 
     C = np.asarray([list(map(float, c)) for c in cents], dtype=np.float32)
@@ -1063,47 +1048,24 @@ def _ivf_cells_arrow(vectors, cents, cids, vec_col: str = "embedding"):
     return vectors.withColumn("cell", _cell_of(F.col(vec_col)))
 
 
-def _ivf_cells_literal(vectors, cents_lit, cid_lit,
-                       vec_col: str = "embedding"):
-    """Small-k cell assignment: inline argmax over literal centroid arrays
-    — a pure PROJECTION, no join/shuffle. ONE literal array-of-arrays +
-    ONE transform (k separate cosine expressions — greatest + a k-branch
-    case tree — were measured at seconds of py4j tree construction +
-    janino codegen on the driver). argmax via
-    ``array_position(scores, array_max(scores))``: first occurrence wins =
-    smallest centroid position = smallest cid (cids are position-mapped
-    through cid_lit, no contiguity assumption)."""
-    scores = F.transform(cents_lit, lambda c: _cos4(F.col(vec_col), c))
-    cell = F.element_at(
-        cid_lit, F.array_position(scores, F.array_max(scores)).cast("int"))
-    return vectors.withColumn("cell", cell)
-
-
-def q_ann_ivf(spark, sf_dir, k: int = _IVF_K, nprobe: int = _IVF_NPROBE,
-              use_arrow: bool | None = None):
+def q_ann_ivf(spark, sf_dir, k: int = _IVF_K, nprobe: int = _IVF_NPROBE):
     """ANN scale path #2 — IVF: assign every vector to its nearest of k
     deterministic centroids, probe the nprobe cells nearest the query,
     exact cosine top-10 within them. The k-row centroid collect is the
     bounded broadcast-dim pattern (k ≤ thousands even at 10^10 rows).
 
-    Cell assignment DEFAULTS to the Arrow-batched argmax over a broadcast
-    centroid matrix (`_ivf_cells_arrow`), whose arithmetic emulates the
-    literal-expression path exactly (`_ivf_scores_np`) so the two
-    assignments are BIT-EQUAL — pinned by
+    Cell assignment is the Arrow-batched argmax over a broadcast centroid
+    matrix (`_ivf_cells_arrow`), whose arithmetic emulates the `_cos4`
+    expression exactly (`_ivf_scores_np`), so it is BIT-EQUAL to an
+    argmax over `_cos4` — pinned by
     tests/test_plans.py::test_ann_ivf_arrow_parity AND end-to-end by the
-    driver-green ``ann_ivf_arrow`` oracle row (same SQL, Arrow forced,
-    hash-green since round 8).  The literal chain (`_ivf_cells_literal`,
-    ``use_arrow=False``) remains selectable as the oracle-documentation
-    path; it was the default through round 10, but its zip_with/aggregate
-    lambdas are interpreted (k·d boxed JVM ops per row — guide §4.2) and
-    measured 9.5 s vs 0.9 s warm at sf1.0 (k=16, 20k vectors, local[32]),
-    plus ~10 s of first-run janino codegen for the k-wide lambda tree.
-    At 10^10 rows the cell column also PARTITIONS the stored table, so
-    the probe's ``cell IN (...)`` filter prunes partitions instead of
-    filtering rows."""
+    driver-green ``ann_ivf``/``ann_ivf_arrow`` oracle rows.  An argmax
+    over a literal `_cos4` transform would evaluate interpreted
+    zip_with/aggregate lambdas — k·d boxed JVM ops per row, measured
+    9.5 s vs 0.9 s warm at sf1.0.  At 10^10 rows the cell column also
+    PARTITIONS the stored table, so the probe's ``cell IN (...)`` filter
+    prunes partitions instead of filtering rows."""
     e = _t(spark, sf_dir, "embeddings")
-    if use_arrow is None:
-        use_arrow = True
     cents = (e.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= k))
              .select("vec_id", "embedding").orderBy("vec_id").collect())
     cmat = [list(map(float, r["embedding"])) for r in cents]
@@ -1111,35 +1073,20 @@ def q_ann_ivf(spark, sf_dir, k: int = _IVF_K, nprobe: int = _IVF_NPROBE,
     vectors = e.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
 
-    if use_arrow:
-        scored = _ivf_cells_arrow(vectors, cmat, cids)
-        # probe selection driver-side with the SAME emulated kernel over
-        # the one collected query vector — bounded (1 × k scores) and
-        # bit-consistent with the assignment; the resulting IN-list is a
-        # partition-prunable predicate on a cell-partitioned store.
-        import numpy as np
-        qv = (e.filter(F.col("vec_id") == 0)
-              .select("embedding").collect()[0]["embedding"])
-        qs = _ivf_scores_np(np.asarray([list(map(float, qv))],
-                                       dtype=np.float32),
-                            np.asarray(cmat, dtype=np.float32))[0]
-        order = sorted(range(len(cids)), key=lambda i: (-qs[i], cids[i]))
-        probe_cells = [cids[i] for i in order[:nprobe]]
-        cand = (scored.filter(F.col("cell").isin(probe_cells))
-                .crossJoin(F.broadcast(q)))
-    else:
-        cents_lit = F.lit(cmat).cast("array<array<float>>")
-        cid_lit = F.lit(cids).cast("array<long>")
-        scored = _ivf_cells_literal(vectors, cents_lit, cid_lit)
-        probe = (q.select(F.posexplode(
-                     F.transform(cents_lit, lambda c: _cos4(F.col("qv"), c)))
-                     .alias("pos", "qcos"))
-                 .select(F.element_at(cid_lit, F.col("pos").cast("int") + 1)
-                          .alias("cell"), "qcos")
-                 .orderBy(F.desc("qcos"), "cell").limit(nprobe)
-                 .select("cell"))
-        cand = (scored.join(F.broadcast(probe), "cell")
-                .crossJoin(F.broadcast(q)))
+    scored = _ivf_cells_arrow(vectors, cmat, cids)
+    # probe selection driver-side with the SAME emulated kernel over the
+    # one collected query vector — bounded (1 × k scores) and
+    # bit-consistent with the assignment; the resulting IN-list is a
+    # partition-prunable predicate on a cell-partitioned store.
+    import numpy as np
+    qv = (e.filter(F.col("vec_id") == 0)
+          .select("embedding").collect()[0]["embedding"])
+    qs = _ivf_scores_np(np.asarray([list(map(float, qv))], dtype=np.float32),
+                        np.asarray(cmat, dtype=np.float32))[0]
+    order = sorted(range(len(cids)), key=lambda i: (-qs[i], cids[i]))
+    probe_cells = [cids[i] for i in order[:nprobe]]
+    cand = (scored.filter(F.col("cell").isin(probe_cells))
+            .crossJoin(F.broadcast(q)))
     # exact top-k within the probed cells through the Arrow pair kernel
     # (bit-equal to the literal _cos4 tree — see _pair_cos4_np)
     return (cand.select("vec_id", "cell",
@@ -1176,13 +1123,10 @@ ORDER BY cos_sim DESC, vec_id LIMIT {_IVF_TOPK}
 
 
 def q_ann_ivf_arrow(spark, sf_dir):
-    """The IVF large-k production path, driver-verified: same query as
-    ``ann_ivf`` but with ``use_arrow=True`` forced, so the Arrow-batched
-    argmax kernel (`_ivf_cells_arrow` / `_ivf_scores_np`) runs against the
-    SAME oracle SQL the literal path is pinned to. Green here proves the
-    bit-parity contract end-to-end through the driver's value-hash compare,
-    not just the in-repo parity unit test."""
-    return q_ann_ivf(spark, sf_dir, use_arrow=True)
+    """The registry name the headline bench list and the oracle count
+    keep for the Arrow-batched IVF argmax (`_ivf_cells_arrow` /
+    `_ivf_scores_np`): the same query and oracle SQL as ``ann_ivf``."""
+    return q_ann_ivf(spark, sf_dir)
 
 
 def q_ann_recall(spark, sf_dir):
@@ -1262,8 +1206,8 @@ def q_ann_recall_sample(spark, sf_dir):
     exact = (pairs.withColumn("rn", F.row_number().over(wq))
              .filter(F.col("rn") <= _IVF_TOPK).select("query_id", "vec_id"))
 
-    # IVF per-query: one cell assignment (Arrow argmax — bit-equal to the
-    # literal chain, see q_ann_ivf), per-query probe map, window top-k
+    # IVF per-query: one cell assignment (Arrow argmax — bit-equal to an
+    # argmax over _cos4, see q_ann_ivf), per-query probe map, window top-k
     scored = _ivf_cells_arrow(e.select("vec_id", "embedding"), cmat, cids)
     wp = Window.partitionBy("query_id").orderBy(F.desc("qcos"), "cell")
     probe = (qs.select(
@@ -1900,30 +1844,12 @@ def _img_corpus(spark: SparkSession) -> DataFrame:
     return spark.read.parquet(_ensure_img_corpus_fixture())
 
 
-def _img_band_pairs(imgs: DataFrame,
-                    bucket_cap: int | None = None,
-                    observer=None) -> DataFrame:
+def _img_band_pairs(imgs: DataFrame) -> DataFrame:
     """MIH candidate generation + exact confirm: posexplode the 4 16-bit
     bands (shiftrightunsigned keeps negative phashes correct), equi-self-join
     per (band, value), dedup multi-band hits, confirm with JVM
     bit_count(xor) ≤ radius.  Radius > 3 means more/wider bands
     (b = r+1), not a different plan.
-
-    ``bucket_cap`` — the 10^10-row hot-bucket guard, same star-expansion
-    shape as _lsh_band_pairs: a (band, value) bucket with k > bucket_cap
-    members emits the clique over its bucket_cap smallest image_ids plus
-    one star edge from each overflow member to the bucket minimum —
-    O(cap² + k) candidates instead of O(k²).  SEMANTIC DIFFERENCE from
-    the text cap, disclosed: MIH candidates pass a distance CONFIRM, so
-    a star edge whose endpoints exceed the radius is dropped and the
-    capped pair graph's components may under-merge relative to uncapped
-    (the standard LSH recall-for-boundedness trade; exact duplicates
-    collapse under exact dedup first, so overflow buckets are near-dup
-    clone sets where the bucket min is within radius of most members).
-    ``observer`` rides the caller's first action with the same
-    capped_buckets / star_edges / dropped_pairs telemetry as
-    _lsh_band_pairs, so a 100 TB run sees capping without reading logs.
-    Default None = exact (the oracle-pinned path).
 
     Round-11 NEGATIVE RESULT, kept as a record: an exact hot-bucket
     sub-band refinement was built and measured (split buckets over
@@ -1939,80 +1865,20 @@ def _img_band_pairs(imgs: DataFrame,
     task — and the sub-bands of templated text are themselves
     low-entropy, so candidates only dropped 2× (90M → 45M).  The naive
     broadcast enumerate-and-confirm is the right shape until candidate
-    enumeration itself dominates, which is what ``bucket_cap`` is for."""
+    enumeration itself dominates."""
     bands = imgs.select(
         "image_id", "phash",
         F.posexplode(F.array(*[
             F.shiftrightunsigned("phash", 16 * k).bitwiseAND(F.lit(0xFFFF))
             for k in range(4)])).alias("band", "bv"))
     dist = F.bit_count(F.col("lp").bitwiseXOR(F.col("rp"))).cast("long")
-    if bucket_cap is None:
-        a = bands.select(F.col("image_id").alias("left_id"),
-                         F.col("phash").alias("lp"), "band", "bv")
-        b = bands.select(F.col("image_id").alias("right_id"),
-                         F.col("phash").alias("rp"), "band", "bv")
-        cand = (a.join(b, ["band", "bv"])
-                 .filter(F.col("left_id") < F.col("right_id"))
-                 .select("left_id", "right_id", "lp", "rp").distinct())
-        return (cand.withColumn("dist", dist)
-                    .filter(F.col("dist") <= _IMG_RADIUS))
-    # capped path — mirrors _lsh_band_pairs: size + min in one un-sorted
-    # window pass over the same (band, bv) exchange the join reuses; the
-    # SORTED rank window only sees over-cap buckets (rare by construction)
-    wp = Window.partitionBy("band", "bv")
-    sized = bands.select(
-        "image_id", "phash", "band", "bv",
-        F.count(F.lit(1)).over(wp).alias("k"),
-        F.min("image_id").over(wp).alias("bmin"))
-    small = sized.filter(F.col("k") <= bucket_cap)
-    pairs_small = (small.select(F.col("image_id").alias("left_id"),
-                                F.col("phash").alias("lp"), "band", "bv")
-                   .join(small.select(F.col("image_id").alias("right_id"),
-                                      F.col("phash").alias("rp"),
-                                      "band", "bv"),
-                         ["band", "bv"])
-                   .filter(F.col("left_id") < F.col("right_id"))
-                   .select("left_id", "right_id", "lp", "rp"))
-    big = sized.filter(F.col("k") > bucket_cap)
-    ws = Window.partitionBy("band", "bv").orderBy("image_id")
-    bigr = big.withColumn("rn", F.row_number().over(ws))
-    bighead = bigr.filter(F.col("rn") <= bucket_cap)
-    clique_big = (bighead.select(F.col("image_id").alias("left_id"),
-                                 F.col("phash").alias("lp"), "band", "bv")
-                  .join(bighead.select(F.col("image_id").alias("right_id"),
-                                       F.col("phash").alias("rp"),
-                                       "band", "bv"),
-                        ["band", "bv"])
-                  .filter(F.col("left_id") < F.col("right_id"))
-                  .select("left_id", "right_id", "lp", "rp"))
-    overflow = bigr.filter(F.col("rn") > bucket_cap)
-    if observer is not None:
-        head = (F.col("rn") == bucket_cap + 1).cast("long")
-        cap_pairs = bucket_cap * (bucket_cap - 1) // 2
-        overflow = overflow.observe(
-            observer,
-            F.coalesce(F.sum(head), F.lit(0)).alias("capped_buckets"),
-            F.count(F.lit(1)).alias("star_edges"),
-            F.coalesce(F.sum((F.expr("k * (k - 1) div 2")
-                              - F.lit(cap_pairs)
-                              - (F.col("k") - bucket_cap)) * head),
-                       F.lit(0)).alias("dropped_pairs"))
-    # star: overflow member → bucket min (rn==1 row carries bmin's phash;
-    # bmin < every overflow image_id by construction)
-    bminrow = (bigr.filter(F.col("rn") == 1)
-               .select(F.col("image_id").alias("left_id"),
-                       F.col("phash").alias("lp"), "band", "bv"))
-    star = (overflow.select(F.col("image_id").alias("right_id"),
-                            F.col("phash").alias("rp"), "band", "bv")
-            .join(bminrow, ["band", "bv"])
-            # duplicate image_id values inside one over-cap bucket would
-            # otherwise emit a self-edge that the dist==0 confirm passes
-            # (id uniqueness is an implicit contract — round-10 ADVICE);
-            # the clique branches already exclude these via left < right
-            .filter(F.col("left_id") != F.col("right_id"))
-            .select("left_id", "right_id", "lp", "rp"))
-    cand = (pairs_small.unionByName(clique_big).unionByName(star)
-            .distinct())
+    a = bands.select(F.col("image_id").alias("left_id"),
+                     F.col("phash").alias("lp"), "band", "bv")
+    b = bands.select(F.col("image_id").alias("right_id"),
+                     F.col("phash").alias("rp"), "band", "bv")
+    cand = (a.join(b, ["band", "bv"])
+             .filter(F.col("left_id") < F.col("right_id"))
+             .select("left_id", "right_id", "lp", "rp").distinct())
     return (cand.withColumn("dist", dist)
                 .filter(F.col("dist") <= _IMG_RADIUS))
 
@@ -2046,7 +1912,7 @@ def q_img_dup_groups(spark, sf_dir):
     (operators/components.py), group label = min numeric image id of the
     cluster, singletons their own group — identical semantics to
     dedup_pipeline, over the image payload.  Node ids are the numeric
-    suffix of image_id (CC and its Arrow fast path need int64 nodes)."""
+    suffix of image_id (int64 is the cheap CC shuffle key)."""
     from ..operators.components import connected_components, \
         free_checkpoint_blocks
 
@@ -2879,8 +2745,7 @@ def q_audio_near_dup(spark, sf_dir):
     oracle's stored-designed-fp brute force hash-gates the kernel itself
     (a bit-permutation break preserves distances but not fingerprints).
     100 TB shape: decode scan parallel by file split, candidates bucketed
-    by (band, value) — never all-pairs; hot buckets take the capped star
-    expansion."""
+    by (band, value) — never all-pairs."""
     # persist the fingerprint frame before the banded self-join — the PCM
     # decode kernel otherwise runs once per join side (round 11; same fix
     # as q_simhash_near_dup)
@@ -3013,8 +2878,7 @@ def q_simhash_near_dup(spark, sf_dir):
     (_img_band_pairs is fingerprint-agnostic: ONE MIH operator serves
     text simhash, image phash, and sampled video-frame phash).  Scale
     shape: banded equi-self-join partitioned by (band, value), nothing
-    all-pairs; hot buckets take the image pipeline's capped star
-    expansion.  The brute-force oracle reuses the simhash recomputation
+    all-pairs.  The brute-force oracle reuses the simhash recomputation
     CTE, so both the sketch AND the pair decomposition are independently
     recomputed."""
     d = _docs_wide(spark, sf_dir)
@@ -3093,8 +2957,7 @@ def _band_keys(docs: DataFrame) -> DataFrame:
 
 
 def _lsh_band_pairs(docs: DataFrame,
-                    bucket_cap: int | None = None,
-                    observer=None) -> DataFrame:
+                    bucket_cap: int | None = None) -> DataFrame:
     """MinHash-LSH candidate pairs over ``docs(doc_id, text)``: band the
     64-perm signature into 8 bands × 8 rows, key each band with a 128-bit
     two-seed xxhash64 struct (a 16-byte JVM-native shuffle key — the key
@@ -3132,9 +2995,9 @@ def _lsh_band_pairs(docs: DataFrame,
     branches read the window frame ``sized``, whose single
     hashpartitioning(bh) exchange is reused across them, so the kernel
     already runs once per action there and an extra materialization was
-    measured as pure overhead (+0.5 s on dedup_groups at sf1.0, paired);
-    the ``observer`` therefore still fires on the CALLER's first action
-    (connected_components' edge materialization), exactly as before."""
+    measured as pure overhead (+0.5 s on dedup_groups at sf1.0, paired).
+    Cap telemetry is read separately through _lsh_cap_stats
+    (q_lsh_cap_stats)."""
     if bucket_cap is None:
         bands = _band_keys(docs).persist()
         a = bands.select(F.col("doc_id").alias("a"), "bh")
@@ -3173,26 +3036,6 @@ def _lsh_band_pairs(docs: DataFrame,
     # star: overflow members → bucket min (bmin is rn==1, inside the
     # clique, and < every overflow doc_id by construction)
     overflow = bigr.filter(F.col("rn") > bucket_cap)
-    if observer is not None:
-        # Cap telemetry riding the caller's OWN first action (round-7
-        # VERDICT ask #5 — the A1 counters-on-writes pattern): one row per
-        # overflow member flows through this node exactly once, when
-        # connected_components materializes its edge persist, so the
-        # metrics cost nothing extra. rn == cap+1 marks each capped bucket
-        # exactly once (that row carries the bucket's k), which yields the
-        # same capped_buckets / star_edges / dropped_pairs definitions as
-        # the standalone _lsh_cap_stats aggregation — pinned equal by
-        # tests/test_text.py::test_dedup_pipeline_cap_observation.
-        head = (F.col("rn") == bucket_cap + 1).cast("long")
-        cap_pairs = bucket_cap * (bucket_cap - 1) // 2
-        overflow = overflow.observe(
-            observer,
-            F.coalesce(F.sum(head), F.lit(0)).alias("capped_buckets"),
-            F.count(F.lit(1)).alias("star_edges"),
-            F.coalesce(F.sum((F.expr("k * (k - 1) div 2")
-                              - F.lit(cap_pairs)
-                              - (F.col("k") - bucket_cap)) * head),
-                       F.lit(0)).alias("dropped_pairs"))
     star = overflow.select(F.col("bmin").alias("a"), F.col("doc_id").alias("b"))
     return pairs_small.unionByName(clique_big).unionByName(star).distinct()
 
@@ -3353,30 +3196,19 @@ def q_dedup_pipeline(spark, sf_dir):
     a recompute.  The output is the pipeline's SMALLEST table (two ids per
     document), so the one extra materialization is cheap at any scale; its
     blocks are freed when the caller drops the returned DataFrame."""
-    out, _ = dedup_pipeline_run(_docs_wide(spark, sf_dir))
-    return out
+    return dedup_pipeline_run(_docs_wide(spark, sf_dir))
 
 
-def dedup_pipeline_run(d: DataFrame,
-                       bucket_cap: int = 64) -> tuple[DataFrame, dict]:
+def dedup_pipeline_run(d: DataFrame) -> DataFrame:
     """The composed dedup pipeline as a library call over ``d(doc_id,
-    text)``: fingerprint → exact-collapse → capped LSH banding over
-    representatives → connected components → expand.  Returns
-    ``(labels, metrics)``: labels is the (doc_id, group_id) frame
-    q_dedup_pipeline exposes; metrics is the star-expansion cap telemetry
-    (bucket_cap / capped_buckets / star_edges / dropped_pairs) OBSERVED on
-    the action the pipeline already executes (the edge materialization
-    inside connected_components — the A1 counters-riding-writes pattern,
-    round-7 VERDICT ask #5), so a production run records capping without
-    a second scan; ``cap_metrics_df`` turns it into a one-row frame a
-    caller appends to whatever metrics table it keeps.  The standalone
-    q_lsh_cap_stats query stays the on-demand form of the same numbers."""
-    from pyspark.sql import Observation
-
+    text)``: fingerprint → exact-collapse → LSH banding over
+    representatives (bucket_cap=64, as q_dedup_groups) → connected
+    components → expand.  Returns the (doc_id, group_id) frame
+    q_dedup_pipeline exposes.  The cap telemetry is the on-demand
+    q_lsh_cap_stats query."""
     from ..operators.components import connected_components, \
         free_checkpoint_blocks
 
-    obs = Observation()
     fp = d.select("doc_id", udfs.udf_fingerprint64("text").alias("fp64"))
     # one fingerprint scan + one shuffle: min-doc_id representative per
     # fingerprint as a whole-partition window agg (the groupBy+re-join
@@ -3389,41 +3221,14 @@ def dedup_pipeline_run(d: DataFrame,
         repmap.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id"),
         "doc_id")
     labels = connected_components(
-        _lsh_band_pairs(repdocs, bucket_cap=bucket_cap, observer=obs),
-        "a", "b")
+        _lsh_band_pairs(repdocs, bucket_cap=64), "a", "b")
     out = (repmap.join(labels, repmap["rep_id"] == labels["id"], "left")
            .select("doc_id",
                    F.coalesce("label", "rep_id").alias("group_id"))
            .localCheckpoint(eager=True))
     repmap.unpersist()
     free_checkpoint_blocks(labels)
-    # connected_components ran the action (edges.count) — obs.get returns
-    # immediately; empty overflow branch → nulls → zeros.  When the WHOLE
-    # pair graph is empty (a corpus chunk with no near-dups at all), AQE's
-    # empty-relation propagation can replace the overflow subtree with an
-    # EmptyRelation and prune the CollectMetrics node outright — then the
-    # JVM-side get returns no row and toPyRow raises.  That pruning can
-    # only happen when zero rows flowed through the cap branch, so the
-    # truthful telemetry is all-zeros.
-    try:
-        got = obs.get
-    except Exception:  # Py4JJavaError — metrics node pruned (empty graph)
-        got = {"capped_buckets": 0, "star_edges": 0, "dropped_pairs": 0}
-    metrics = {"bucket_cap": bucket_cap,
-               "capped_buckets": int(got["capped_buckets"] or 0),
-               "star_edges": int(got["star_edges"] or 0),
-               "dropped_pairs": int(got["dropped_pairs"] or 0)}
-    return out, metrics
-
-
-def cap_metrics_df(spark: SparkSession, metrics: dict) -> DataFrame:
-    """One-row frame of dedup_pipeline_run's cap telemetry, schema-matched
-    to q_lsh_cap_stats so it appends to the same metrics table."""
-    return spark.createDataFrame(
-        [(int(metrics["bucket_cap"]), int(metrics["capped_buckets"]),
-          int(metrics["star_edges"]), int(metrics["dropped_pairs"]))],
-        "bucket_cap long, capped_buckets long, star_edges long, "
-        "dropped_pairs long")
+    return out
 
 
 def _sql_dedup_pipeline() -> str:
@@ -3445,6 +3250,17 @@ FROM repmap m LEFT JOIN cc ON m.rep_id = cc.id
 
 
 # -- scene segmentation → per-scene keyframe dedup (video pipeline comp) ----
+
+
+def _pack_id(hi, lo, width: int):
+    """``hi * width + lo`` as one int64 node id.  A ``lo`` outside
+    [0, width) would silently collide with a neighbour's id ((1, 64) and
+    (2, 0) both pack to 128 at width 64), so it raises through
+    ``F.raise_error`` in the same projection — no extra job."""
+    ok = F.when((lo >= 0) & (lo < width), lo).otherwise(F.raise_error(
+        F.concat(F.lit(f"packed id: low part outside [0, {width}): "),
+                 lo.cast("string"))))
+    return hi * width + ok
 
 
 def q_scene_dedup(spark, sf_dir):
@@ -3483,8 +3299,9 @@ def q_scene_dedup(spark, sf_dir):
                             | (F.col("dist") >= _SCENE_CUT_T))
                  .select("video_id", "scene_id",
                          F.col("frame_idx").alias("keyframe_idx"), "phash",
-                         (F.substring("video_id", 6, 16).cast("long") * 64
-                          + F.col("scene_id")).alias("nid")))
+                         _pack_id(F.substring("video_id", 6, 16)
+                                  .cast("long"), F.col("scene_id"), 64)
+                         .alias("nid")))
     keyframes = keyframes.persist()  # scanned by band join + label join
     pairs = _img_band_pairs(
         keyframes.select(F.col("nid").alias("image_id"), "phash"))
@@ -3573,8 +3390,7 @@ def q_xmodal_dup_groups(spark, sf_dir):
     kernels are single-pass Arrow; image codes are a stored column); the
     union is unioned LOGICALLY (no materialization) and feeds the same
     (band, value)-partitioned MIH join as every per-modality query —
-    nothing all-pairs, hot buckets take the capped star expansion; CC is
-    the same pointer-jumping operator.  Node ids pack modality tag bits
+    nothing all-pairs; CC is the same pointer-jumping operator.  Node ids pack modality tag bits
     over the per-modality numeric id (2^40 apart — no collisions at any
     corpus size the id widths admit).
 
@@ -3601,8 +3417,8 @@ def q_xmodal_dup_groups(spark, sf_dir):
         F.lit("video").alias("modality"),
         F.concat_ws(":", "video_id", "frame_idx").alias("item_id"),
         (F.lit(2 * _XM_TAG)
-         + F.substring("video_id", 6, 16).cast("long") * 1024
-         + F.col("frame_idx")).alias("nid"),
+         + _pack_id(F.substring("video_id", 6, 16).cast("long"),
+                    F.col("frame_idx"), 1024)).alias("nid"),
         F.col("phash").alias("code"))
     audio = _audio_fingerprints(
         spark.read.parquet(_ensure_audio_nd_fixture())).select(
@@ -3784,9 +3600,8 @@ def oracles() -> dict[str, str]:
         "cosine_topk": SQL_COSINE_TOPK,
         "ann_lsh_bucket": _sql_ann_lsh(),
         "ann_ivf": _sql_ann_ivf(),
-        # the Arrow kernel is bit-equal to the literal path by contract, so
-        # it must reproduce the SAME oracle rows — sharing the SQL is the
-        # point, not a shortcut
+        # the same query as ann_ivf under its Arrow-kernel name — sharing
+        # the SQL is the point, not a shortcut
         "ann_ivf_arrow": _sql_ann_ivf(),
         "a3_recent": SQL_A3,
         "a2_rates": SQL_A2,

@@ -23,6 +23,27 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn, *args, **kwargs)`` -> (fn's result, the number of
+    Spark jobs submitted while it ran, from any thread).  Jobs are read
+    back from Spark's status store once the listener bus drains; every job
+    id above the highest one recorded before the call is counted."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def job_ids():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return [jobs.apply(i).jobId() for i in range(jobs.size())]
+
+    def count(fn, *args, **kwargs):
+        before = max(job_ids(), default=-1)
+        out = fn(*args, **kwargs)
+        return out, sum(1 for j in job_ids() if j > before)
+
+    return count
+
+
+@pytest.fixture(scope="session")
 def fixture_web(tmp_path_factory):
     """Deterministic synthetic web (scale=1) written once per session."""
     from subdomain_crawler_spark.sources import fixtures

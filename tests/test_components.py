@@ -107,3 +107,13 @@ def test_driver_fast_path_parity(spark):
     assert fast == dist
     assert fast[101] == 100 and fast[15] == 10
     assert all(fast[i] == 40 for i in range(40, 61))
+
+    # string ids: lexicographic-min labels on both paths; a self-pair
+    # makes c.com/0 a singleton component labelled by itself
+    spairs = spark.createDataFrame(
+        [("b.com/0", "a.com/0"), ("c.com/0", "c.com/0")],
+        "a: string, b: string")
+    for thr in (250_000, 0):
+        got = _labels(connected_components(spairs, driver_threshold=thr))
+        assert got == {"a.com/0": "a.com/0", "b.com/0": "a.com/0",
+                       "c.com/0": "c.com/0"}

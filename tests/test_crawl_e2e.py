@@ -17,13 +17,10 @@ from subdomain_crawler_spark.plans.crawl import CrawlEngine
 from subdomain_crawler_spark.plans.reference_sim import ReferenceSimulator
 
 
-def _run_engine(spark, fixture_web, tmp_path, cfg):
-    base = fixture_web["base"]
-    corpus = spark.read.parquet(f"{base}/corpus.parquet")
-    dns = spark.read.parquet(f"{base}/dns.parquet")
-    eng = CrawlEngine(spark, cfg, str(tmp_path / "crawl"), corpus, dns, robots=None)
-    stats = eng.run(seeds=fixture_web["seeds"], max_rounds=10)
-    return eng, stats
+# Spark jobs one run of the fixture crawl submits (local[4], 4 shuffle
+# partitions, AQE on), measured when this ceiling was set. A change that
+# adds jobs to a round must raise it deliberately.
+CRAWL_JOB_CEILING = 154
 
 
 def _sim(fixture_web, cfg):
@@ -33,12 +30,29 @@ def _sim(fixture_web, cfg):
 
 
 @pytest.fixture(scope="module")
-def crawl_pair(spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=False)
-    eng, stats = _run_engine(spark, fixture_web,
-                             tmp_path_factory.mktemp("run"), cfg)
-    sim = _sim(fixture_web, cfg)
-    return eng, stats, sim
+def crawl_run(spark, fixture_web, tmp_path_factory, count_jobs):
+    """One crawl of the fixture web and the Spark jobs its run submitted."""
+    base = fixture_web["base"]
+    eng = CrawlEngine(spark, CrawlConfig(honor_robots=False),
+                      str(tmp_path_factory.mktemp("run") / "crawl"),
+                      spark.read.parquet(f"{base}/corpus.parquet"),
+                      spark.read.parquet(f"{base}/dns.parquet"))
+    stats, jobs = count_jobs(eng.run, seeds=fixture_web["seeds"],
+                             max_rounds=10)
+    return eng, stats, jobs
+
+
+@pytest.fixture(scope="module")
+def crawl_pair(crawl_run, fixture_web):
+    eng, stats, _ = crawl_run
+    return eng, stats, _sim(fixture_web, CrawlConfig(honor_robots=False))
+
+
+def test_crawl_job_ceiling(crawl_run):
+    jobs = crawl_run[2]
+    assert jobs <= CRAWL_JOB_CEILING, (
+        f"fixture crawl submitted {jobs} Spark jobs, ceiling "
+        f"{CRAWL_JOB_CEILING}")
 
 
 def test_round_count_matches(crawl_pair):
@@ -267,73 +281,6 @@ def test_seed_file_path_is_distributed(spark, tmp_path):
     assert eng._n0 == eng2._n0
 
 
-def test_engine_dedup_documents_records_cap_metrics(spark, tmp_path):
-    """The production dedup entry point (CrawlEngine.dedup_documents)
-    persists its star-expansion cap telemetry into the engine checkpoint
-    (round-8 VERDICT ask #6): one ``dedup_metrics`` row per run,
-    schema-matched to q_lsh_cap_stats, riding the pipeline's own action —
-    zero extra scans."""
-    corpus = spark.createDataFrame(
-        [("example.com", ["https"], 200, "hello")],
-        "host string, proto_ok array<string>, status_code int, "
-        "caption string")
-    dns = spark.createDataFrame(
-        [("example.com", ["1.2.3.4"], 0)],
-        "host string, ips array<string>, rcode int")
-    eng = CrawlEngine(spark, CrawlConfig(honor_robots=False),
-                      str(tmp_path / "crawl"), corpus, dns)
-    docs = spark.createDataFrame(
-        [("d1", "alpha beta gamma delta"),
-         ("d2", "alpha beta gamma delta"),
-         ("d3", "totally different text with other words entirely")],
-        "doc_id string, text string")
-    labels = eng.dedup_documents(docs, bucket_cap=100)
-    got = labels.toPandas().set_index("doc_id")["group_id"]
-    assert got["d1"] == got["d2"] != got["d3"]
-    m = eng.io.read_round("dedup_metrics", 0).toPandas()
-    assert sorted(m.columns) == ["bucket_cap", "capped_buckets",
-                                 "dropped_pairs", "star_edges"]
-    assert len(m) == 1 and int(m["bucket_cap"].iloc[0]) == 100
-    assert int(m["dropped_pairs"].iloc[0]) == 0
-
-
-def test_engine_quality_filter_exports_and_records_reasons(spark, tmp_path):
-    """The production quality-gate entry point (CrawlEngine.
-    quality_filter_documents, round-9 VERDICT ask #6): kept rows land in
-    the checkpoint's kept_documents table WITHOUT the verdict helper
-    columns, per-reason counts land in quality_metrics, and both ride
-    the ONE export write (the observe node sits below the keep filter,
-    so rejected rows are counted without a second scan)."""
-    from subdomain_crawler_spark.plans.driver_queries import QF_REASONS
-
-    corpus = spark.createDataFrame(
-        [("example.com", ["https"], 200, "hello")],
-        "host string, proto_ok array<string>, status_code int, "
-        "caption string")
-    dns = spark.createDataFrame(
-        [("example.com", ["1.2.3.4"], 0)],
-        "host string, ips array<string>, rcode int")
-    eng = CrawlEngine(spark, CrawlConfig(honor_robots=False),
-                      str(tmp_path / "crawl"), corpus, dns)
-    good = ("the quick brown fox jumps over the lazy dog and then "
-            "the dog was very happy about it all day long indeed")
-    docs = spark.createDataFrame(
-        [(1, good),                    # kept
-         (2, good),                    # exact dup of 1 -> duplicate
-         (3, "der die das und ist nicht " * 5),   # -> non_english
-         (4, "the cat sat")],          # -> too_short
-        "doc_id long, text string")
-    counts = eng.quality_filter_documents(docs)
-    assert counts == {"duplicate": 1, "non_english": 1, "too_short": 1,
-                      "low_quality": 0, "repetitive": 0, "kept": 1}
-    kept = eng.io.read_round("kept_documents", 0).toPandas()
-    assert sorted(kept.columns) == ["doc_id", "text"]  # helpers dropped
-    assert list(kept["doc_id"]) == [1]
-    m = eng.io.read_round("quality_metrics", 0).toPandas()
-    assert len(m) == 1 and sorted(m.columns) == sorted(QF_REASONS)
-    assert int(m["kept"].iloc[0]) == 1 and int(m["duplicate"].iloc[0]) == 1
-
-
 def test_queue_cap_deterministic_drop(spark, tmp_path):
     """G1 deterministic analog (round 10): with enforce_queue_cap on, each
     round's next frontier is capped at queue_size rows in (depth, host)
@@ -392,43 +339,3 @@ def test_queue_cap_root_enqueue_fatal(spark, fixture_web, tmp_path):
     assert len(fixture_web["seeds"]) > 1
     with pytest.raises(RuntimeError, match="queue is full"):
         eng.start(fixture_web["seeds"])
-
-
-def test_engine_dedup_images_groups_and_metrics(spark, tmp_path):
-    """CrawlEngine.dedup_images (round 10): the multimodal twin of
-    dedup_documents — phash MIH + shared CC over STRING image_ids
-    (lexicographic min labels), singletons own group, telemetry row in
-    img_dedup_metrics; with a bucket_cap the hot-bucket counts land."""
-    corpus = spark.createDataFrame(
-        [("example.com", ["https"], 200, "hello")],
-        "host string, proto_ok array<string>, status_code int, "
-        "caption string")
-    dns = spark.createDataFrame(
-        [("example.com", ["1.2.3.4"], 0)],
-        "host string, ips array<string>, rcode int")
-    eng = CrawlEngine(spark, CrawlConfig(honor_robots=False),
-                      str(tmp_path / "crawl"), corpus, dns)
-    # i1~i2 (Hamming 1), i3 far from both (no shared band, dist >> 3)
-    imgs = spark.createDataFrame(
-        [("a.com/0", 0x0F0F), ("b.com/0", 0x0F0E),
-         ("c.com/0", -0x0123456789ABCDF0)],
-        "image_id string, phash long")
-    labels = eng.dedup_images(imgs).toPandas().set_index("image_id")
-    g = labels["group_id"]
-    assert g["a.com/0"] == g["b.com/0"] == "a.com/0"  # lexicographic min
-    assert g["c.com/0"] == "c.com/0"                  # singleton
-    m = eng.io.read_round("img_dedup_metrics", 0).toPandas()
-    assert len(m) == 1 and int(m["bucket_cap"].iloc[0]) == 0
-    assert int(m["capped_buckets"].iloc[0]) == 0
-    # capped form: telemetry rides the CC action
-    eng2 = CrawlEngine(spark, CrawlConfig(honor_robots=False),
-                       str(tmp_path / "crawl2"), corpus, dns)
-    hot = spark.createDataFrame(
-        [(f"h{i:02d}.com/0", 7 | (1 << 48 + i)) for i in range(5)],
-        "image_id string, phash long")
-    labels2 = eng2.dedup_images(hot, bucket_cap=2).toPandas()
-    assert set(labels2["group_id"]) == {"h00.com/0"}  # one group via stars
-    m2 = eng2.io.read_round("img_dedup_metrics", 0).toPandas()
-    assert int(m2["bucket_cap"].iloc[0]) == 2
-    assert int(m2["capped_buckets"].iloc[0]) == 3
-    assert int(m2["star_edges"].iloc[0]) == 9

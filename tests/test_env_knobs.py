@@ -1,8 +1,8 @@
 """Configuration lives in CrawlConfig: no library module may read a
 ``SPARK_GRAFT_*`` environment variable, every CrawlConfig field must be
-read somewhere in the library, and every Arrow UDF must have a caller
-(source text scans, no Spark). Deployment paths such as ``SPARK_HOME``
-stay allowed."""
+read somewhere in the library, every Arrow UDF must have a caller, and
+the crawl module stays free of the query plans (source text scans, no
+Spark). Deployment paths such as ``SPARK_HOME`` stay allowed."""
 
 from __future__ import annotations
 
@@ -44,3 +44,12 @@ def test_every_udf_has_a_caller():
     text = "\n".join(path.read_text() for path in callers)
     uncalled = [u for u in defined if not re.search(rf"\b{u}\b", text)]
     assert not uncalled, f"udfs with no caller: {uncalled}"
+
+
+def test_crawl_module_imports_no_query_plans():
+    """The crawl engine is only the crawl: the oracled query plans and the
+    connected-components operator they use are not part of a round."""
+    text = (PKG / "plans" / "crawl.py").read_text()
+    named = [m for m in ("driver_queries", "operators.components")
+             if m in text]
+    assert not named, f"plans/crawl.py names {named}"

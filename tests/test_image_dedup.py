@@ -166,58 +166,3 @@ def test_img_resize_query_invariant(spark):
     for r in rows:
         assert r["scale_invariant"] is True
         assert r["phash_up"] == r["phash_down"] == int(ph[r["image_id"]])
-
-
-def test_band_pairs_bucket_cap(spark):
-    """The MIH hot-bucket guard (round 10): with bucket_cap, an over-cap
-    (band, value) bucket emits the clique over its cap smallest ids plus
-    star edges to the bucket min — O(cap²+k) candidates — and the
-    telemetry Observation counts it.  A huge cap must be pair-identical
-    to the uncapped oracle-pinned path on the real fixture."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    # parity: cap far above any fixture bucket == exact path
-    imgs = dq._img_corpus(spark)
-    exact = sorted(tuple(r) for r in dq._img_band_pairs(imgs)
-                   .select("left_id", "right_id", "dist").collect())
-    capped = sorted(tuple(r) for r in
-                    dq._img_band_pairs(imgs, bucket_cap=10_000)
-                    .select("left_id", "right_id", "dist").collect())
-    assert capped == exact
-
-    # designed hot buckets: 5 codes whose bands 0/1/2 are constant
-    # (7, 0, 0) — THREE over-cap buckets of the same 5 members — and
-    # band 3 distinct; pairwise Hamming 2 <= radius
-    codes = [7 | (1 << 48 + i) for i in range(5)]
-    hot = spark.createDataFrame(
-        [(f"h{i:02d}", c) for i, c in enumerate(codes)],
-        "image_id string, phash long")
-    obs = Observation()
-    got = dq._img_band_pairs(hot, bucket_cap=2, observer=obs)
-    pairs = sorted((r["left_id"], r["right_id"]) for r in got.collect())
-    # per bucket: clique over {h00,h01} + stars h02/h03/h04 -> h00, all
-    # confirmed; the three buckets' identical pair sets collapse under
-    # the distinct
-    assert pairs == [("h00", "h01"), ("h00", "h02"), ("h00", "h03"),
-                     ("h00", "h04")]
-    m = obs.get
-    assert int(m["capped_buckets"]) == 3
-    assert int(m["star_edges"]) == 9   # 3 overflow members x 3 buckets
-    # per bucket C(5,2)=10 minus 1 clique pair minus 3 star edges = 6
-    assert int(m["dropped_pairs"]) == 18
-
-
-def test_band_pairs_capped_star_no_self_edges(spark):
-    """Round-10 ADVICE: duplicate image_id values inside one over-cap
-    bucket must not surface as self-edges from the star branch (a
-    self-edge has dist 0, so the radius confirm would pass it)."""
-    codes = [7 | (1 << (48 + i)) for i in range(5)]
-    rows = [(f"h{i:02d}", c) for i, c in enumerate(codes)]
-    # duplicate the bucket MINIMUM so its second copy lands in the
-    # overflow region at cap=1 — the star branch would emit (h00, h00)
-    rows.append(("h00", codes[0]))
-    hot = spark.createDataFrame(rows, "image_id string, phash long")
-    got = dq._img_band_pairs(hot, bucket_cap=1).collect()
-    assert got  # the star edges to the bucket min survive
-    assert all(r["left_id"] != r["right_id"] for r in got)

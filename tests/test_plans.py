@@ -219,38 +219,58 @@ def test_round_table_codec_default_zstd(spark, tmp_path):
 
 
 def test_ann_ivf_arrow_parity(spark):
-    """The large-k Arrow argmax kernel is BIT-EQUAL to the oracle-pinned
-    literal-expression path (the q_ann_ivf docstring's contract): same
-    cell for every vector and the same final top-k, at the default k=16
-    and at a k above the literal/Arrow threshold, on the sf0.1 embeddings
-    — the kernel emulates the literal path's arithmetic exactly
-    (f32 products, sequential f64 fold, HALF_UP round; _ivf_scores_np)."""
+    """The Arrow argmax kernel is BIT-EQUAL to an argmax over the
+    oracle-pinned `_cos4` expression (the q_ann_ivf docstring's contract):
+    same cell for every vector and the same final top-k, at the default
+    k=16 and at k=40, on the sf0.1 embeddings — the kernel emulates
+    `_cos4`'s arithmetic exactly (f32 products, sequential f64 fold,
+    HALF_UP round; _ivf_scores_np).  The reference is built here: a
+    vectors × centroids crossJoin scored with `_cos4`, argmax by
+    row_number over (score desc, cid asc)."""
+    from pyspark.sql import Window
+
     sf = "/root/testdata/sf0.1"
     e = spark.read.parquet(f"{sf}/embeddings.parquet")
+    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
 
-    for k in (16, dq._IVF_LITERAL_MAX_K + 8):
+    for k in (16, 40):
         cents = (e.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= k))
                  .select("vec_id", "embedding").orderBy("vec_id").collect())
         cmat = [list(map(float, r["embedding"])) for r in cents]
         cids = [int(r["vec_id"]) for r in cents]
         vectors = e.filter(F.col("vec_id") != 0).select("vec_id", "embedding")
+        c = e.filter((F.col("vec_id") >= 1) & (F.col("vec_id") <= k)).select(
+            F.col("vec_id").alias("cid"), F.col("embedding").alias("cv"))
 
-        lit = dq._ivf_cells_literal(
-            vectors, F.lit(cmat).cast("array<array<float>>"),
-            F.lit(cids).cast("array<long>"))
+        w = Window.partitionBy("vec_id").orderBy(F.desc("score"), "cid")
+        ref = (vectors.crossJoin(F.broadcast(c))
+               .withColumn("score", dq._cos4(F.col("embedding"),
+                                             F.col("cv")))
+               .withColumn("rn", F.row_number().over(w))
+               .filter(F.col("rn") == 1)
+               .select("vec_id", F.col("cid").alias("cell"), "embedding"))
         arw = dq._ivf_cells_arrow(vectors, cmat, cids)
-        cells_lit = {r["vec_id"]: r["cell"]
-                     for r in lit.select("vec_id", "cell").collect()}
+        cells_ref = {r["vec_id"]: r["cell"]
+                     for r in ref.select("vec_id", "cell").collect()}
         cells_arw = {r["vec_id"]: r["cell"]
                      for r in arw.select("vec_id", "cell").collect()}
-        assert cells_lit == cells_arw, f"cell assignment diverged at k={k}"
+        assert cells_ref == cells_arw, f"cell assignment diverged at k={k}"
 
-        # end-to-end: the full query returns identical rows on both paths
-        rows_lit = [tuple(r) for r in
-                    dq.q_ann_ivf(spark, sf, k=k, use_arrow=False).collect()]
-        rows_arw = [tuple(r) for r in
-                    dq.q_ann_ivf(spark, sf, k=k, use_arrow=True).collect()]
-        assert rows_lit == rows_arw, f"top-k diverged at k={k}"
+        # end-to-end: the full query returns the reference's top-k
+        probe = (c.crossJoin(q)
+                 .select("cid", dq._cos4(F.col("cv"), F.col("qv"))
+                         .alias("qcos"))
+                 .orderBy(F.desc("qcos"), "cid").limit(dq._IVF_NPROBE)
+                 .select(F.col("cid").alias("cell")))
+        rows_ref = [tuple(r) for r in
+                    ref.join(F.broadcast(probe), "cell").crossJoin(q)
+                    .select("vec_id", "cell",
+                            dq._cos4(F.col("embedding"), F.col("qv"))
+                            .alias("cos_sim"))
+                    .orderBy(F.desc("cos_sim"), "vec_id")
+                    .limit(dq._IVF_TOPK).collect()]
+        rows_arw = [tuple(r) for r in dq.q_ann_ivf(spark, sf, k=k).collect()]
+        assert rows_ref == rows_arw, f"top-k diverged at k={k}"
 
 
 def test_ann_recall_matches_python_recomputation(spark):
@@ -265,17 +285,6 @@ def test_ann_recall_matches_python_recomputation(spark):
     assert row["n_hits"] == len(exact & ivf)
     assert row["recall_at_k"] == round(len(exact & ivf) / dq._IVF_TOPK, 4)
     assert 0 <= row["n_hits"] <= dq._IVF_TOPK
-
-
-def test_ann_ivf_threshold_selects_arrow():
-    """q_ann_ivf defaults to the Arrow argmax path at every k (round 11 —
-    the literal path measured 10× slower warm; bit-parity is pinned by
-    test_ann_ivf_arrow_parity and the driver-green ann_ivf_arrow row)."""
-    import inspect
-
-    sig = inspect.signature(dq.q_ann_ivf)
-    assert sig.parameters["k"].default == dq._IVF_K
-    assert sig.parameters["use_arrow"].default is None  # None → Arrow
 
 
 def test_pair_cos4_parity(spark):

@@ -25,17 +25,39 @@ def _mk_engine(spark, fixture_web, workdir, cfg, with_robots):
 # ---------------------------------------------------------------------------
 
 
+# Spark jobs one run of the politeness fixture crawl submits (local[4], 4
+# shuffle partitions, AQE on), measured when this ceiling was set. A change
+# that adds jobs to a round must raise it deliberately.
+POLITE_CRAWL_JOB_CEILING = 942
+
+
 @pytest.fixture(scope="module")
-def polite_pair(spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=True)
+def polite_run(spark, fixture_web, tmp_path_factory, count_jobs):
+    """One politeness crawl of the fixture web and the Spark jobs its run
+    submitted."""
     eng = _mk_engine(spark, fixture_web, str(tmp_path_factory.mktemp("pol")),
-                     cfg, with_robots=True)
-    stats = eng.run(seeds=fixture_web["seeds"], max_rounds=24)
+                     CrawlConfig(honor_robots=True), with_robots=True)
+    stats, jobs = count_jobs(eng.run, seeds=fixture_web["seeds"],
+                             max_rounds=24)
+    return eng, stats, jobs
+
+
+@pytest.fixture(scope="module")
+def polite_pair(polite_run, fixture_web):
+    cfg = CrawlConfig(honor_robots=True)
+    eng, stats, _ = polite_run
     t = fixture_web["tables"]
     sim = ReferenceSimulator(t["corpus"], t["dns"], cfg,
                              robots=t["robots"]).run(fixture_web["seeds"],
                                                      max_rounds=24)
     return eng, stats, sim
+
+
+def test_polite_crawl_job_ceiling(polite_run):
+    jobs = polite_run[2]
+    assert jobs <= POLITE_CRAWL_JOB_CEILING, (
+        f"politeness fixture crawl submitted {jobs} Spark jobs, ceiling "
+        f"{POLITE_CRAWL_JOB_CEILING}")
 
 
 def test_politeness_changes_schedule(polite_pair, crawl_ref_rounds):

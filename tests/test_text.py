@@ -154,55 +154,6 @@ def test_lsh_bucket_cap_bounds_pairs_and_preserves_groups(spark):
         assert st["dropped_pairs"] == 8 * per_bucket_drop
 
 
-def test_dedup_pipeline_cap_observation(spark):
-    """Round-7 VERDICT ask #5: when the composed dedup pipeline runs with
-    a bucket cap, the cap telemetry rides the pipeline's OWN action as an
-    Observation — no second scan — and matches the standalone
-    q_lsh_cap_stats aggregation over the same (representative) docs.
-    The clone corpus has no exact duplicates (each template differs by a
-    token), so representatives == docs and the two sides see identical
-    buckets."""
-    from subdomain_crawler_spark.plans.driver_queries import (
-        _lsh_cap_stats, cap_metrics_df, dedup_pipeline_run)
-
-    n = 200
-    template = ("lorem ipsum dolor sit amet consectetur adipiscing elit sed "
-                "do eiusmod tempor incididunt ut labore et dolore magna "
-                "aliqua token_%d")
-    docs = spark.createDataFrame([(i, template % i) for i in range(n)],
-                                 "doc_id: long, text: string")
-    cap = 8
-    labels, metrics = dedup_pipeline_run(docs, bucket_cap=cap)
-
-    # non-zero on a clone set — a production run records capping for free
-    assert metrics["bucket_cap"] == cap
-    assert metrics["capped_buckets"] > 0
-    assert metrics["star_edges"] >= n - cap
-    assert metrics["dropped_pairs"] > 0
-
-    # identical numbers to the on-demand aggregation form
-    st = _lsh_cap_stats(docs, bucket_cap=cap).collect()[0]
-    assert metrics == {k: st[k] for k in
-                       ("bucket_cap", "capped_buckets", "star_edges",
-                        "dropped_pairs")}
-
-    # grouping unaffected by capping: one component over all clones
-    assert labels.select("group_id").distinct().count() == 1
-
-    # the metrics row appends to the same table the standalone query feeds
-    mdf = cap_metrics_df(spark, metrics)
-    assert mdf.columns == _lsh_cap_stats(docs, bucket_cap=cap).columns
-    assert mdf.collect()[0]["dropped_pairs"] == metrics["dropped_pairs"]
-
-    # zero-overflow corpus → all-zero telemetry, same action, no errors
-    tiny = spark.createDataFrame(
-        [(i, f"wholly distinct vocabulary row {i} entry {i * 31}")
-         for i in range(6)], "doc_id: long, text: string")
-    _, zero = dedup_pipeline_run(tiny, bucket_cap=cap)
-    assert zero == {"bucket_cap": cap, "capped_buckets": 0,
-                    "star_edges": 0, "dropped_pairs": 0}
-
-
 def test_repetition_score_known_values(spark, tmp_path):
     """dup-3-gram fraction (Gopher-family repetition filter): known values
     incl. the n<3 guard (a sequence(1, n-2) with n<3 would generate a

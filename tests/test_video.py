@@ -119,3 +119,21 @@ def test_video_scene_cuts_matches_brute_force(spark):
         elif int(vid[5:]) % 3 == 0:     # role-0 boundary: base vs base
             assert cut
     assert any(cut for *_, cut in got) and any(not cut for *_, cut in got)
+
+
+def test_pack_id_raises_when_low_part_overflows(spark):
+    """Scene and frame node ids pack ``video_num * width + low``; a low
+    part ≥ width would collide with the next video's ids ((1, 64) and
+    (2, 0) both give 128 at width 64), so _pack_id raises instead."""
+    from pyspark.errors import SparkRuntimeException
+    from pyspark.sql import functions as F
+
+    from subdomain_crawler_spark.plans import driver_queries as dq
+
+    df = spark.createDataFrame([(1, 64), (2, 0)], "v long, s long")
+    packed = df.select(dq._pack_id(F.col("v"), F.col("s"), 64).alias("nid"))
+    with pytest.raises(SparkRuntimeException, match="low part outside"):
+        packed.collect()
+    ok = df.filter("s < 64").select(
+        dq._pack_id(F.col("v"), F.col("s"), 64).alias("nid"))
+    assert [r["nid"] for r in ok.collect()] == [128]
