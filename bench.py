@@ -222,7 +222,7 @@ def _crawl_over(spark, base: str, seeds, label: dict) -> dict:
     try:
         corpus = spark.read.parquet(f"{base}/corpus.parquet")
         dns = spark.read.parquet(f"{base}/dns.parquet")
-        cfg = CrawlConfig(honor_robots=False)
+        cfg = CrawlConfig()
         eng = CrawlEngine(spark, cfg, f"{workdir}/crawl", corpus, dns)
         max_rounds = int(os.environ.get("SPARK_GRAFT_MAX_ROUNDS", "16"))
         t0 = time.monotonic()

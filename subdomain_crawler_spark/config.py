@@ -2,13 +2,18 @@
 
 Reference: pkg/interface/cli/config.go (queue=10000 :22,
 max-depth=3 :20, expand-sld default true :57). Every field here is read
-somewhere in the library (tests/test_env_knobs.py). The seen set is the exact anti-join
+somewhere in the library and set by main.py's CLI (tests/test_env_knobs.py).
+The seen set is the exact anti-join
 (no bloom knobs: the reference's 1e6 @ 1% bloom, :43-44, is replaced by an
 exact ``left_anti``), both fetch protocols are always tried https then
 http (:79), and the live-network timeouts have no offline analog, so
 none of those are settable. Queue capacity is not enforced by default: a
 DataFrame frontier is unbounded and drop-on-full is opt-in
 (``enforce_queue_cap``, documented divergence G1, SURVEY.md §2.6).
+
+Politeness has no field: it runs if and only if the engine is given a
+robots table, and its round window and skew salt are constants of
+operators/politeness.py.
 """
 
 from __future__ import annotations
@@ -48,13 +53,3 @@ class CrawlConfig:
     # a given run — this reproduces the semantics CLASS (bounded frontier,
     # excess dropped, drops observable) deterministically.
     enforce_queue_cap: bool = False
-
-    # politeness / skew (north-rule additions, M4)
-    salt_buckets: int = 8           # salts per root for hot-SLD skew
-    default_per_root_budget: int | None = None  # None = unlimited per round
-    honor_robots: bool = True
-    # crawl_delay → budget derivation: one round models this many seconds of
-    # polite fetching, so a root with crawl_delay=d gets at most
-    # round_window_sec // d slots per round (combined with max_per_round via
-    # min; see operators/politeness.py)
-    round_window_sec: int = 60

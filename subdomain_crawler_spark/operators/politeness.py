@@ -5,10 +5,11 @@ North-rule addition: the reference has NO per-host rate control (its channel
 is plain FIFO; a hot SLD simply monopolizes the 32 workers —
 /root/reference/pkg/infrastructure/storage/queue.go:25-39). Here each round
 schedules at most ``budget`` hosts per registered domain; the rest defer to
-the next round's frontier with their row unchanged.
+the next round's frontier with their row unchanged. Politeness runs if and
+only if a robots table is given.
 
-Robots semantics (robots table: root, disallow_prefixes array<string>,
-crawl_delay int, max_per_round int):
+Robots semantics (robots table, schema ``ROBOTS_COLUMNS``: root,
+disallow_prefixes array<string>, crawl_delay int, max_per_round int):
 
 * **disallow_prefixes** — entries starting with ``/`` are URL-path prefixes;
   this engine fetches only ``proto://host/``, so a ``/`` entry blocks the
@@ -17,11 +18,11 @@ crawl_delay int, max_per_round int):
   ``admin.<anything>``) — the useful robots dialect for a host-only crawl.
   Blocked hosts are dropped permanently (never fetched, never deferred;
   they were already seen-marked at extraction time, so they cannot loop).
-* **crawl_delay** — one round models ``cfg.round_window_sec`` seconds of
+* **crawl_delay** — one round models ``ROUND_WINDOW_SEC`` seconds of
   polite fetching, so a root with crawl_delay=d gets at most
-  ``round_window_sec // d`` slots per round.
-* effective budget = min(max_per_round, delay budget), nulls skipped;
-  both null → ``cfg.default_per_root_budget`` (None = unlimited).
+  ``ROUND_WINDOW_SEC // d`` slots per round (at least 1).
+* effective budget = min(max_per_round, delay budget), nulls skipped. A
+  root absent from robots, or whose row has both null, is unlimited.
 
 Canonical priority within a root: (depth ASC, host ASC) — shallow hosts
 first, deterministic tie-break, so deferral is reproducible and the E2E
@@ -31,13 +32,17 @@ Skew design: a single ``Window.partitionBy(root)`` would put one hot root's
 10^8 candidates in one task. We take the top-K in two phases:
 
   1. window over (root, salt) with salt = pmod(xxhash64(host), S) — S
-     parallel windows per root, keep ``budget`` rows per salted bucket
-     (a safe over-approximation of the per-root top-K);
-  2. exact window over root on the ≤ S·budget survivors.
+     parallel windows per root; rows ranked past ``budget`` in their salted
+     bucket are deferred outright (a safe over-approximation of the
+     per-root top-K);
+  2. exact window over root on the ≤ S·budget phase-1 survivors. Rows that
+     phase 1 pruned pass through this window keyed by their own host, one
+     row per window, so they stay spread and are never ranked again.
 
-Phase 2's input is bounded by S·budget per root regardless of frontier skew,
-so the exact window never sees the hot tail. Both phases are shuffle-local
-(same key prefix); AQE coalesces the small buckets.
+Phase 2's per-root window is bounded by S·budget rows regardless of
+frontier skew, so it never holds the hot tail. Each window runs once and
+the result is one frame (unbounded ∪ bounded rows), so a caller that
+persists it gets both sides of the split from one evaluation.
 """
 
 from __future__ import annotations
@@ -45,74 +50,55 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..config import CrawlConfig
+# the robots table's schema; CrawlEngine selects exactly these columns
+ROBOTS_COLUMNS = ("root", "disallow_prefixes", "crawl_delay", "max_per_round")
+
+# seconds of polite fetching one round models (crawl_delay → budget)
+ROUND_WINDOW_SEC = 60
+
+# salted buckets per root in the phase-1 window (hot-SLD skew)
+_SALT_BUCKETS = 8
 
 
-def apply_budgets(
-    frontier: DataFrame,
-    robots: DataFrame | None,
-    cfg: CrawlConfig,
-) -> tuple[DataFrame, DataFrame | None]:
-    """Split the round's frontier into (scheduled, deferred), after dropping
-    robots-disallowed hosts.
+def apply_budgets(frontier: DataFrame, robots: DataFrame) -> DataFrame:
+    """The round's frontier minus robots-disallowed hosts, with a boolean
+    ``scheduled`` column: True for the rows this round fetches, False for
+    the rows deferred to the next round. One frame yields both sides, so
+    the windows are evaluated once when the caller persists it."""
+    blocked = F.exists(
+        "disallow_prefixes",
+        lambda p: (p == F.lit("/"))
+        | ((~p.startswith("/")) & F.col("host").startswith(p)))
+    # clamp to ≥1: a crawl_delay longer than the round window must still
+    # schedule one host per round, else the row defers forever
+    delay_budget = F.when(
+        F.col("crawl_delay") > 0,
+        F.greatest(F.lit(1),
+                   F.floor(F.lit(ROUND_WINDOW_SEC) / F.col("crawl_delay")))
+        .cast("int"))
+    f = (frontier.join(F.broadcast(robots), "root", "left")
+         .filter(~F.coalesce(blocked, F.lit(False)))
+         .select("host", "root", "depth",
+                 # least skips nulls; both null → unlimited
+                 F.least("max_per_round", delay_budget).alias("_budget")))
 
-    deferred is None when no budget applies (politeness disabled or no
-    robots table and no default budget) — the common fast path adds zero
-    shuffles.
-    """
-    default_budget = cfg.default_per_root_budget
-    if not cfg.honor_robots or (robots is None and default_budget is None):
-        return frontier, None
+    unbounded = (f.filter(F.col("_budget").isNull())
+                 .select("host", "root", "depth",
+                         F.lit(True).alias("scheduled")))
 
-    if robots is not None:
-        cols = ["root", "max_per_round"]
-        has_disallow = "disallow_prefixes" in robots.columns
-        has_delay = "crawl_delay" in robots.columns
-        cols += (["disallow_prefixes"] if has_disallow else []) \
-            + (["crawl_delay"] if has_delay else [])
-        f = frontier.join(F.broadcast(robots.select(*cols)), "root", "left")
-        if has_disallow:
-            blocked = F.exists(
-                "disallow_prefixes",
-                lambda p: (p == F.lit("/"))
-                | ((~p.startswith("/")) & F.col("host").startswith(p)))
-            f = (f.filter(~F.coalesce(blocked, F.lit(False)))
-                  .drop("disallow_prefixes"))
-        budget = F.col("max_per_round")
-        if has_delay:
-            # clamp to ≥1: a crawl_delay longer than the round window must
-            # still schedule one host per round, else the row defers forever
-            delay_budget = F.when(
-                F.col("crawl_delay") > 0,
-                F.greatest(F.lit(1),
-                           F.floor(F.lit(cfg.round_window_sec)
-                                   / F.col("crawl_delay"))).cast("int"))
-            budget = F.least(budget, delay_budget)  # least skips nulls
-            f = f.withColumn("_budget", budget).drop("crawl_delay")
-        else:
-            f = f.withColumn("_budget", budget)
-        f = (f.withColumn("_budget",
-                          F.coalesce(F.col("_budget"),
-                                     F.lit(default_budget).cast("int")))
-              .drop("max_per_round"))
-    else:
-        f = frontier.withColumn("_budget", F.lit(default_budget).cast("int"))
-
-    unbounded = f.filter(F.col("_budget").isNull()).drop("_budget")
-
-    bounded = f.filter(F.col("_budget").isNotNull())
-    salt = F.pmod(F.xxhash64("host"), F.lit(cfg.salt_buckets))
+    salt = F.pmod(F.xxhash64("host"), F.lit(_SALT_BUCKETS))
     w1 = Window.partitionBy("root", salt).orderBy("depth", "host")
-    pruned = (bounded.withColumn("_rn1", F.row_number().over(w1))
-              .filter(F.col("_rn1") <= F.col("_budget")).drop("_rn1"))
-    w2 = Window.partitionBy("root").orderBy("depth", "host")
-    ranked = pruned.withColumn("_rn2", F.row_number().over(w2))
-    scheduled = (ranked.filter(F.col("_rn2") <= F.col("_budget"))
-                 .drop("_rn2", "_budget"))
+    ranked = (f.filter(F.col("_budget").isNotNull())
+              .withColumn("_kept",
+                          F.row_number().over(w1) <= F.col("_budget")))
+    # phase 2 ranks the phase-1 survivors per root; a pruned row is keyed by
+    # its own host, so it is a window of one and the hot tail never gathers
+    # under one key
+    w2 = (Window.partitionBy("root", F.when(~F.col("_kept"), F.col("host")))
+          .orderBy("depth", "host"))
+    bounded = ranked.select(
+        "host", "root", "depth",
+        (F.col("_kept") & (F.row_number().over(w2) <= F.col("_budget")))
+        .alias("scheduled"))
 
-    # deferred = bounded minus scheduled (anti-join on host is exact: the
-    # frontier is host-deduped per round)
-    deferred = bounded.drop("_budget").join(
-        scheduled.select("host"), "host", "left_anti")
-
-    return scheduled.unionByName(unbounded), deferred
+    return unbounded.unionByName(bounded)

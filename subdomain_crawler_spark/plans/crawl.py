@@ -22,10 +22,11 @@ Scale notes (10^10-URL frontier, 1000 executors):
 * the fetch-join broadcasts the frontier only while it is small (driver
   checks a row-count threshold); past that it falls back to a shuffle join
   on ``host`` — with AQE enabled skewed hosts re-split at runtime;
-* the frontier and candidate sets are salted-repartitioned by
-  ``hash(root, salt)`` before heavy stages to break hot-SLD skew
-  (one university seed → thousands of candidates; reference has no answer
-  to this, SURVEY.md §4);
+* with a robots table, the per-root politeness budget is a top-K taken
+  in two windows: first over ``(root, salt)``, then exactly over ``root``
+  on the ≤ salts·budget survivors, so a hot SLD's tail (one university
+  seed → thousands of candidates; the reference has no answer to this,
+  SURVEY.md §4) never lands in one task (operators/politeness.py);
 * the seen set is parquet-partitioned per round, and D1 is one exact
   ``left_anti`` of the round's distinct candidates against it (the
   candidate side broadcasts into the winner join while the round is small).
@@ -203,6 +204,10 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = cfg
+        # the robots schema is fixed: a table missing a column fails here,
+        # before anything is written
+        self.robots = (robots.select(*pol.ROBOTS_COLUMNS)
+                       if robots is not None else None)
         self.io = ParquetSnapshotIO(spark, workdir)
         # column split: the metadata projection is what gets cached per round
         # (bytes/row ~50); caption text streams through the extraction UDF
@@ -259,7 +264,6 @@ class CrawlEngine:
             F.col("host").alias("content_host"),
             F.substring("caption", 1, cap).alias("caption"))
         self.dns = dns
-        self.robots = robots
         # schema snapshots taken ONCE — per-round code never calls
         # .columns on a join output (each such call re-analyzes the whole
         # plan tree on the driver, a serial per-round cost)
@@ -521,8 +525,14 @@ class CrawlEngine:
         shrink = (lambda df: df.coalesce(1)) if small else (lambda df: df)
 
         # politeness (W2, north-rule addition): per-root budget via salted
-        # window; deferred rows carry over to the next round's frontier
-        active_f, deferred = pol.apply_budgets(frontier, self.robots, cfg)
+        # window; deferred rows carry over to the next round's frontier.
+        # The ranked frame is persisted so wave 2a (scheduled side) and the
+        # wave 2b frontier write (deferred side) share one window pass.
+        marked = None
+        active_f = frontier
+        if self.robots is not None:
+            marked = pol.apply_budgets(frontier, self.robots).persist()
+            active_f = marked.filter("scheduled").drop("scheduled")
 
         # J1+J2 in one cached frame (_join_frontier): round 2 shipped
         # inner+anti join pairs for both corpus and dns — four frontier
@@ -754,10 +764,10 @@ class CrawlEngine:
                           .observe(obs_enq,
                                    F.count(F.lit(1)).alias("enqueued")))
         next_frontier = novel_frontier
-        if deferred is not None:
+        if marked is not None:
+            deferred = marked.filter(~F.col("scheduled")).drop("scheduled")
             next_frontier = self._dedup_frontier(
-                next_frontier.unionByName(
-                    deferred.select("host", "root", "depth")))
+                next_frontier.unionByName(deferred))
         # G1 deterministic analog (off by default — see config): cap the
         # next frontier at queue_size rows, keep rule (depth, host)
         # ascending (shallowest first, then lexicographic — a fixed
@@ -838,6 +848,7 @@ class CrawlEngine:
         self.io.append_local("metrics", pd.DataFrame([st.__dict__]), rnd)
         self.io.commit_round(rnd, {"config": asdict(cfg)})
 
-        for df in (frontier, j, pages, winner):
-            df.unpersist()
+        for df in (frontier, marked, j, pages, winner):
+            if df is not None:
+                df.unpersist()
         return st, n_next

@@ -50,10 +50,6 @@ def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.repartition(spark.sparkContext.defaultParallelism)
 
 
-def _sql_list(items) -> str:
-    return "(" + ", ".join(f"'{i}'" for i in items) + ")"
-
-
 def _sql_array(items) -> str:
     return "[" + ", ".join(f"'{i}'" for i in items) + "]"
 
@@ -1637,12 +1633,26 @@ def _payload_imgs(i: int):
     return img, got
 
 
+def _install_fixture(table, path: str) -> str:
+    """Write ``table`` as parquet to ``path`` atomically and return ``path``.
+    The tmp name is unique per builder process: concurrent builders (pytest
+    workers, a parallel driver+test run) must not interleave writes to one
+    tmp file and atomically install a corrupt parquet."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    tmp = f"{path}.{os.getpid()}.tmp"
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
+    return path
+
+
 def _ensure_payload_fixture() -> str:
     import os
 
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from ..functions import image as img_m
 
@@ -1661,13 +1671,7 @@ def _ensure_payload_fixture() -> str:
         rows["ref_bytes"].append(img_m.encode_image(ref, "raw"))
         rows["ref_fmt"].append("raw")
         rows["ref_caption"].append(cap)
-    # unique tmp name per builder process: concurrent builders (pytest
-    # workers, parallel driver+test run) must not interleave writes to one
-    # tmp file and atomically install a corrupt parquet (round-8 ADVICE)
-    tmp = f"{_PAYLOAD_FIXTURE}.{os.getpid()}.tmp"
-    pq.write_table(pa.table(rows), tmp)
-    os.replace(tmp, _PAYLOAD_FIXTURE)  # atomic vs concurrent builders
-    return _PAYLOAD_FIXTURE
+    return _install_fixture(pa.table(rows), _PAYLOAD_FIXTURE)
 
 
 def q_payload_validate(spark, sf_dir):
@@ -1803,7 +1807,6 @@ def _ensure_img_corpus_fixture() -> str:
 
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from ..functions import image as img_m
 
@@ -1832,12 +1835,7 @@ def _ensure_img_corpus_fixture() -> str:
                         ("w", pa.int32()), ("h", pa.int32()),
                         ("fmt", pa.string()), ("caption", pa.string()),
                         ("phash", pa.int64())])
-    # unique tmp per process: concurrent builders must not interleave
-    # writes to one tmp file and install a corrupt parquet (round-8 ADVICE)
-    tmp = f"{_IMG_CORPUS_FIXTURE}.{os.getpid()}.tmp"
-    pq.write_table(pa.table(rows, schema=schema), tmp)
-    os.replace(tmp, _IMG_CORPUS_FIXTURE)  # atomic vs concurrent builders
-    return _IMG_CORPUS_FIXTURE
+    return _install_fixture(pa.table(rows, schema=schema), _IMG_CORPUS_FIXTURE)
 
 
 def _img_corpus(spark: SparkSession) -> DataFrame:
@@ -2028,12 +2026,7 @@ def _ensure_video_fixture() -> str:
                         ("w", pa.int32()), ("h", pa.int32()),
                         ("n_frames", pa.int32()), ("fps", pa.int32()),
                         ("fmt", pa.string())])
-    # unique tmp per process: concurrent builders must not interleave
-    # writes to one tmp file and install a corrupt parquet (round-8 ADVICE)
-    tmp = f"{_VIDEO_FIXTURE}.{os.getpid()}.tmp"
-    pq.write_table(pa.table(rows, schema=schema), tmp)
-    os.replace(tmp, _VIDEO_FIXTURE)  # atomic vs concurrent builders
-    return _VIDEO_FIXTURE
+    return _install_fixture(pa.table(rows, schema=schema), _VIDEO_FIXTURE)
 
 
 def _sampled_frame_hashes(videos: DataFrame,
@@ -2152,12 +2145,7 @@ def _ensure_video_nd_fixture() -> str:
                         ("w", pa.int32()), ("h", pa.int32()),
                         ("n_frames", pa.int32()), ("fps", pa.int32()),
                         ("fmt", pa.string())])
-    # unique tmp per process: concurrent builders must not interleave
-    # writes to one tmp file and install a corrupt parquet (round-8 ADVICE)
-    tmp = f"{_VIDEO_ND_FIXTURE}.{os.getpid()}.tmp"
-    pq.write_table(pa.table(rows, schema=schema), tmp)
-    os.replace(tmp, _VIDEO_ND_FIXTURE)  # atomic vs concurrent builders
-    return _VIDEO_ND_FIXTURE
+    return _install_fixture(pa.table(rows, schema=schema), _VIDEO_ND_FIXTURE)
 
 
 def q_video_near_dup(spark, sf_dir):
@@ -2538,7 +2526,6 @@ def _ensure_audio_fixture() -> str:
 
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from ..functions import audio as aud_m
 
@@ -2556,12 +2543,7 @@ def _ensure_audio_fixture() -> str:
     schema = pa.schema([("audio_id", pa.string()), ("bytes", pa.binary()),
                         ("sr", pa.int32()), ("n_samples", pa.int32()),
                         ("fmt", pa.string())])
-    # unique tmp per process: concurrent builders must not interleave
-    # writes to one tmp file and install a corrupt parquet (round-8 ADVICE)
-    tmp = f"{_AUDIO_FIXTURE}.{os.getpid()}.tmp"
-    pq.write_table(pa.table(rows, schema=schema), tmp)
-    os.replace(tmp, _AUDIO_FIXTURE)  # atomic vs concurrent builders
-    return _AUDIO_FIXTURE
+    return _install_fixture(pa.table(rows, schema=schema), _AUDIO_FIXTURE)
 
 
 def q_audio_features(spark, sf_dir):
@@ -2668,7 +2650,6 @@ def _ensure_audio_nd_fixture() -> str:
 
     import numpy as np
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from ..functions import audio as aud_m
 
@@ -2701,12 +2682,7 @@ def _ensure_audio_nd_fixture() -> str:
     schema = pa.schema([("audio_id", pa.string()), ("bytes", pa.binary()),
                         ("sr", pa.int32()), ("n_samples", pa.int32()),
                         ("fmt", pa.string()), ("fp", pa.int64())])
-    # unique tmp per process: concurrent builders must not interleave
-    # writes to one tmp file and install a corrupt parquet (round-8 ADVICE)
-    tmp = f"{_AUDIO_ND_FIXTURE}.{os.getpid()}.tmp"
-    pq.write_table(pa.table(rows, schema=schema), tmp)
-    os.replace(tmp, _AUDIO_ND_FIXTURE)  # atomic vs concurrent builders
-    return _AUDIO_ND_FIXTURE
+    return _install_fixture(pa.table(rows, schema=schema), _AUDIO_ND_FIXTURE)
 
 
 def _audio_fingerprints(clips: DataFrame) -> DataFrame:

@@ -45,6 +45,7 @@ import pandas as pd
 
 from ..config import CrawlConfig
 from ..functions import core
+from ..operators.politeness import ROUND_WINDOW_SEC
 
 # fetch order, fixed in the reference CLI (cli/config.go:79) and hardcoded
 # in CrawlEngine's first-success derivation
@@ -118,25 +119,22 @@ class ReferenceSimulator:
         # operators/politeness.py (module docstring there documents the
         # robots dialect: '/'-entries are URL-path prefixes against our
         # always-'/' fetch path, other entries are host prefixes;
-        # crawl_delay=d → round_window_sec // d slots, min'd with
-        # max_per_round)
+        # crawl_delay=d → ROUND_WINDOW_SEC // d slots, min'd with
+        # max_per_round). None = no robots table, politeness off.
         self.budgets: dict[str, tuple[list[str], int | None]] | None = None
-        if cfg.honor_robots and (robots is not None or
-                                 cfg.default_per_root_budget is not None):
+        if robots is not None:
             self.budgets = {}
-            if robots is not None:
-                for r in robots.itertuples():
-                    prefixes = list(getattr(r, "disallow_prefixes", []) or [])
-                    cands = []
-                    mpr = getattr(r, "max_per_round", None)
-                    if mpr is not None:
-                        cands.append(int(mpr))
-                    delay = getattr(r, "crawl_delay", None)
-                    if delay is not None and int(delay) > 0:
-                        # ≥1: over-long delays still schedule one host/round
-                        cands.append(max(1, cfg.round_window_sec // int(delay)))
-                    self.budgets[r.root] = (
-                        prefixes, min(cands) if cands else None)
+            for r in robots.itertuples():
+                prefixes = list(r.disallow_prefixes or [])
+                cands = []
+                if r.max_per_round is not None:
+                    cands.append(int(r.max_per_round))
+                delay = r.crawl_delay
+                if delay is not None and int(delay) > 0:
+                    # ≥1: over-long delays still schedule one host/round
+                    cands.append(max(1, ROUND_WINDOW_SEC // int(delay)))
+                self.budgets[r.root] = (
+                    prefixes, min(cands) if cands else None)
 
     @staticmethod
     def _disallowed(host: str, prefixes: list[str]) -> bool:
@@ -152,25 +150,17 @@ class ReferenceSimulator:
         is the distributed twin — same canonical priority)."""
         if self.budgets is None:
             return rows, []
-        default = self.cfg.default_per_root_budget
         by_root: dict[str, list[tuple[str, str, int]]] = {}
         for row in rows:
             by_root.setdefault(row[1], []).append(row)
         scheduled, deferred = [], []
         for root, group in by_root.items():
-            info = self.budgets.get(root)
-            if info is not None:
-                prefixes, budget = info
-                if prefixes:  # disallowed: dropped permanently, not deferred
-                    group = [r for r in group
-                             if not self._disallowed(r[0], prefixes)]
-                if budget is None:
-                    # robots row with BOTH max_per_round and crawl_delay null
-                    # falls back to the default budget — twin of
-                    # operators/politeness.py's unconditional null coalesce
-                    budget = default
-            else:
-                budget = default
+            # absent root, or a row with both max_per_round and crawl_delay
+            # null: unlimited
+            prefixes, budget = self.budgets.get(root, ([], None))
+            if prefixes:  # disallowed: dropped permanently, not deferred
+                group = [r for r in group
+                         if not self._disallowed(r[0], prefixes)]
             if budget is None:
                 scheduled.extend(group)
                 continue

@@ -141,7 +141,7 @@ def make_web(scale: int = 1, seed: int = 42) -> dict[str, pd.DataFrame]:
              max_per_round=1000000),
         dict(root="beta.org", disallow_prefixes=[], crawl_delay=2,
              max_per_round=2 * scale),
-        # gamma.co.uk intentionally absent → default budget applies
+        # gamma.co.uk intentionally absent → unlimited (no budget)
     ]
 
     seeds = pd.DataFrame({"seed": [HOT_ROOT, "alpha.com", "beta.org",

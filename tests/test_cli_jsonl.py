@@ -46,7 +46,7 @@ def _sim(fixture_web):
     from subdomain_crawler_spark.config import CrawlConfig
     from subdomain_crawler_spark.plans.reference_sim import ReferenceSimulator
 
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
     sim = ReferenceSimulator(fixture_web["tables"]["corpus"],
                              fixture_web["tables"]["dns"], cfg)
     return sim.run(fixture_web["seeds"])
@@ -210,7 +210,7 @@ def test_dashboard_renders(spark, fixture_web, tmp_path):
     base = fixture_web["base"]
     corpus = spark.read.parquet(f"{base}/corpus.parquet")
     dns = spark.read.parquet(f"{base}/dns.parquet")
-    eng = CrawlEngine(spark, CrawlConfig(honor_robots=False),
+    eng = CrawlEngine(spark, CrawlConfig(),
                       str(tmp_path / "crawl"), corpus, dns)
     buf = _io.StringIO()
     dash = TextDashboard(io=eng.io, out=buf)

@@ -33,7 +33,7 @@ def _sim(fixture_web, cfg):
 def crawl_run(spark, fixture_web, tmp_path_factory, count_jobs):
     """One crawl of the fixture web and the Spark jobs its run submitted."""
     base = fixture_web["base"]
-    eng = CrawlEngine(spark, CrawlConfig(honor_robots=False),
+    eng = CrawlEngine(spark, CrawlConfig(),
                       str(tmp_path_factory.mktemp("run") / "crawl"),
                       spark.read.parquet(f"{base}/corpus.parquet"),
                       spark.read.parquet(f"{base}/dns.parquet"))
@@ -45,7 +45,7 @@ def crawl_run(spark, fixture_web, tmp_path_factory, count_jobs):
 @pytest.fixture(scope="module")
 def crawl_pair(crawl_run, fixture_web):
     eng, stats, _ = crawl_run
-    return eng, stats, _sim(fixture_web, CrawlConfig(honor_robots=False))
+    return eng, stats, _sim(fixture_web, CrawlConfig())
 
 
 def test_crawl_job_ceiling(crawl_run):
@@ -141,7 +141,7 @@ def test_giant_regime_crawl_equivalence(spark, fixture_web, tmp_path,
     base = fixture_web["base"]
     corpus = spark.read.parquet(f"{base}/corpus.parquet").repartition(width)
     dns = spark.read.parquet(f"{base}/dns.parquet").repartition(width)
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
     eng = CrawlEngine(spark, cfg, str(tmp_path / "crawl"), corpus, dns)
     assert eng.corpus_meta.is_cached and eng.corpus_text.is_cached
     assert eng.dns.is_cached
@@ -174,8 +174,7 @@ def test_response_size_cap(spark, tmp_path):
     dns = pd.DataFrame({"host": ["cap.com", "early.cap.com"],
                         "ips": [["1.1.1.1"], ["1.1.1.2"]],
                         "rcode": [0, 0]})
-    cfg = CrawlConfig(honor_robots=False, expand_sld=False,
-                      max_response_size=40)
+    cfg = CrawlConfig(expand_sld=False, max_response_size=40)
     sim = ReferenceSimulator(corpus, dns, cfg).run(["cap.com"])
     base = str(tmp_path / "web")
     spark.createDataFrame(corpus).write.parquet(f"{base}/corpus.parquet")
@@ -228,7 +227,7 @@ def test_wildcard_parent_seeds_multipartition_dedup(spark, tmp_path,
     dns = spark.createDataFrame(
         [("kawasaki.jp", ["1.2.3.4"], 0)],
         "host string, ips array<string>, rcode int")
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
     seeds = ["kawasaki.jp", "www.kawasaki.jp", "city.kawasaki.jp",
              "x.city.kawasaki.jp", "example.com", "www.example.com",
              "www.ck", "bar.ck"]
@@ -263,7 +262,7 @@ def test_seed_file_path_is_distributed(spark, tmp_path):
     dns = spark.createDataFrame(
         [("example.com", ["1.2.3.4"], 0)],
         "host string, ips array<string>, rcode int")
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
 
     eng = CrawlEngine(spark, cfg, str(tmp_path / "c1"), corpus, dns)
     eng.start(spark.read.text(str(seeds_file)))
@@ -307,8 +306,7 @@ def test_queue_cap_deterministic_drop(spark, tmp_path):
     cdf = spark.read.parquet(f"{base}/corpus.parquet")
     ddf = spark.read.parquet(f"{base}/dns.parquet")
 
-    cfg = CrawlConfig(honor_robots=False, expand_sld=False,
-                      enforce_queue_cap=True, queue_size=4)
+    cfg = CrawlConfig(expand_sld=False, enforce_queue_cap=True, queue_size=4)
     eng = CrawlEngine(spark, cfg, str(tmp_path / "capped"), cdf, ddf)
     stats = eng.run(seeds=["hub.com"], max_rounds=4)
     got = sorted(r.host for r in eng.io.read_round("frontier", 1).collect())
@@ -333,8 +331,7 @@ def test_queue_cap_root_enqueue_fatal(spark, fixture_web, tmp_path):
     base = fixture_web["base"]
     corpus = spark.read.parquet(f"{base}/corpus.parquet")
     dns = spark.read.parquet(f"{base}/dns.parquet")
-    cfg = CrawlConfig(honor_robots=False, expand_sld=False,
-                      enforce_queue_cap=True, queue_size=1)
+    cfg = CrawlConfig(expand_sld=False, enforce_queue_cap=True, queue_size=1)
     eng = CrawlEngine(spark, cfg, str(tmp_path / "fatal"), corpus, dns)
     assert len(fixture_web["seeds"]) > 1
     with pytest.raises(RuntimeError, match="queue is full"):

@@ -1,8 +1,8 @@
 """Configuration lives in CrawlConfig: no library module may read a
 ``SPARK_GRAFT_*`` environment variable, every CrawlConfig field must be
-read somewhere in the library, every Arrow UDF must have a caller, and
-the crawl module stays free of the query plans (source text scans, no
-Spark). Deployment paths such as ``SPARK_HOME`` stay allowed."""
+read somewhere in the library and set by the CLI, every Arrow UDF must
+have a caller, and the crawl module stays free of the query plans (source
+text scans, no Spark). Deployment paths such as ``SPARK_HOME`` stay allowed."""
 
 from __future__ import annotations
 
@@ -31,6 +31,18 @@ def test_every_crawlconfig_field_is_read():
     unread = [f.name for f in dataclasses.fields(CrawlConfig)
               if not re.search(rf"\b{f.name}\b", text)]
     assert not unread, f"CrawlConfig fields read by no library module: {unread}"
+
+
+def test_every_crawlconfig_field_is_set_by_the_cli():
+    """A field main.py's ``CrawlConfig(...)`` call does not pass has one
+    value outside tests: a constant, not an option."""
+    text = (PKG.parent / "main.py").read_text()
+    call = re.search(r"\bCrawlConfig\((.*?)\n\s*\)", text, re.S)
+    assert call, "no CrawlConfig(...) call in main.py: scan is broken"
+    passed = set(re.findall(r"^\s*(\w+)=", call.group(1), re.M))
+    unset = [f.name for f in dataclasses.fields(CrawlConfig)
+             if f.name not in passed]
+    assert not unset, f"CrawlConfig fields main.py never sets: {unset}"
 
 
 def test_every_udf_has_a_caller():

@@ -102,7 +102,7 @@ def test_engine_crawls_over_iceberg(iceberg_spark, tmp_path):
     fixtures.write_parquet(tables, base)
     corpus = iceberg_spark.read.parquet(f"{base}/corpus.parquet")
     dns = iceberg_spark.read.parquet(f"{base}/dns.parquet")
-    eng = CrawlEngine(iceberg_spark, CrawlConfig(honor_robots=False),
+    eng = CrawlEngine(iceberg_spark, CrawlConfig(),
                       str(tmp_path / "crawl"), corpus, dns)
     eng.io = IcebergSnapshotIO(iceberg_spark, base="", namespace="t_engine")
     stats = eng.run(seeds=list(tables["seeds"]["seed"]), max_rounds=4)

@@ -81,19 +81,24 @@ def test_dedup_frontier_partial_aggregate(spark):
 
 
 def test_politeness_robots_join_broadcasts(spark, fixture_web):
-    """The robots table joins broadcast (tiny dim vs 10^10-row frontier)."""
-    from subdomain_crawler_spark.config import CrawlConfig
+    """The robots table joins broadcast (tiny dim vs 10^10-row frontier), and
+    one ranked frame carries both sides of the split: its plan holds the
+    salted phase-1 window and the per-root phase-2 window once each, with
+    no anti-join, so a persisted frame serves the scheduled and the
+    deferred rows from one evaluation."""
+    import re
+
     from subdomain_crawler_spark.operators.politeness import apply_budgets
 
     base = fixture_web["base"]
     frontier = spark.createDataFrame(
         [("www.a.com", "a.com", 0)], "host string, root string, depth int")
     robots = spark.read.parquet(f"{base}/robots.parquet")
-    scheduled, deferred = apply_budgets(
-        frontier, robots, CrawlConfig(honor_robots=True))
-    p = plan(scheduled)
+    p = plan(apply_budgets(frontier, robots))
     assert "BroadcastHashJoin" in p
     assert "CartesianProduct" not in p
+    assert len(re.findall(r"^\(\d+\) Window$", p, re.M)) == 2
+    assert "LeftAnti" not in p
 
 
 def test_crawl_fetch_join_broadcasts_frontier(spark, fixture_web, tmp_path):
@@ -108,7 +113,7 @@ def test_crawl_fetch_join_broadcasts_frontier(spark, fixture_web, tmp_path):
     from subdomain_crawler_spark.plans.crawl import CrawlEngine
 
     base = fixture_web["base"]
-    eng = CrawlEngine(spark, CrawlConfig(honor_robots=False),
+    eng = CrawlEngine(spark, CrawlConfig(),
                       str(tmp_path / "c"),
                       spark.read.parquet(f"{base}/corpus.parquet"),
                       spark.read.parquet(f"{base}/dns.parquet"))

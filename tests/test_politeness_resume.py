@@ -28,7 +28,7 @@ def _mk_engine(spark, fixture_web, workdir, cfg, with_robots):
 # Spark jobs one run of the politeness fixture crawl submits (local[4], 4
 # shuffle partitions, AQE on), measured when this ceiling was set. A change
 # that adds jobs to a round must raise it deliberately.
-POLITE_CRAWL_JOB_CEILING = 942
+POLITE_CRAWL_JOB_CEILING = 745
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +36,7 @@ def polite_run(spark, fixture_web, tmp_path_factory, count_jobs):
     """One politeness crawl of the fixture web and the Spark jobs its run
     submitted."""
     eng = _mk_engine(spark, fixture_web, str(tmp_path_factory.mktemp("pol")),
-                     CrawlConfig(honor_robots=True), with_robots=True)
+                     CrawlConfig(), with_robots=True)
     stats, jobs = count_jobs(eng.run, seeds=fixture_web["seeds"],
                              max_rounds=24)
     return eng, stats, jobs
@@ -44,7 +44,7 @@ def polite_run(spark, fixture_web, tmp_path_factory, count_jobs):
 
 @pytest.fixture(scope="module")
 def polite_pair(polite_run, fixture_web):
-    cfg = CrawlConfig(honor_robots=True)
+    cfg = CrawlConfig()
     eng, stats, _ = polite_run
     t = fixture_web["tables"]
     sim = ReferenceSimulator(t["corpus"], t["dns"], cfg,
@@ -68,7 +68,7 @@ def test_politeness_changes_schedule(polite_pair, crawl_ref_rounds):
 
 @pytest.fixture(scope="module")
 def crawl_ref_rounds(spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
     t = fixture_web["tables"]
     sim = ReferenceSimulator(t["corpus"], t["dns"], cfg).run(
         fixture_web["seeds"], max_rounds=24)
@@ -136,9 +136,8 @@ def test_robots_disallow_blocks_hosts(polite_pair, fixture_web):
 
 
 def test_crawl_delay_longer_than_window_still_schedules(spark):
-    """crawl_delay > round_window_sec clamps to budget 1 (not 0): rows must
+    """crawl_delay > ROUND_WINDOW_SEC clamps to budget 1 (not 0): rows must
     not defer forever."""
-    from subdomain_crawler_spark.config import CrawlConfig
     from subdomain_crawler_spark.operators.politeness import apply_budgets
 
     frontier = spark.createDataFrame(
@@ -148,14 +147,29 @@ def test_crawl_delay_longer_than_window_still_schedules(spark):
         [("slow.com", [], 3600, 1000)],
         "root string, disallow_prefixes array<string>, crawl_delay int,"
         "max_per_round int")
-    scheduled, deferred = apply_budgets(
-        frontier, robots, CrawlConfig(honor_robots=True, round_window_sec=60))
-    assert scheduled.count() == 1
-    assert deferred.count() == 3
+    marked = apply_budgets(frontier, robots)
+    assert marked.filter("scheduled").count() == 1
+    assert marked.filter("NOT scheduled").count() == 3
+
+
+def test_robots_table_missing_a_column_is_refused(spark, fixture_web,
+                                                   tmp_path):
+    """The robots schema is fixed: a table without crawl_delay fails when
+    the engine is built, before any round is committed."""
+    from pyspark.errors import AnalysisException
+
+    base = fixture_web["base"]
+    robots = spark.read.parquet(f"{base}/robots.parquet").drop("crawl_delay")
+    wd = tmp_path / "wd"
+    with pytest.raises(AnalysisException, match="crawl_delay"):
+        CrawlEngine(spark, CrawlConfig(), str(wd),
+                    spark.read.parquet(f"{base}/corpus.parquet"),
+                    spark.read.parquet(f"{base}/dns.parquet"), robots=robots)
+    assert not (wd / "_manifest.json").exists()
 
 
 def test_crawl_delay_budget(polite_pair, fixture_web):
-    """alpha.com: crawl_delay=5 with round_window_sec=60 → ≤12 hosts per
+    """alpha.com: crawl_delay=5 with ROUND_WINDOW_SEC=60 → ≤12 hosts per
     round even though max_per_round is 10^6."""
     eng, stats, sim = polite_pair
     for r in range(len(stats)):
@@ -187,7 +201,7 @@ def _assert_states_equal(a, b):
 
 
 def test_resume_equals_uninterrupted(spark, fixture_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
     # uninterrupted
     full = _mk_engine(spark, fixture_web,
                       str(tmp_path_factory.mktemp("full")), cfg, False)
@@ -212,7 +226,7 @@ def test_resume_recovers_from_crash_mid_round(spark, fixture_web,
     """Simulate a crash between a round's table writes and its manifest
     commit: rewind the manifest; the rerun must overwrite the orphan dirs and
     converge to the identical final state."""
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
     wd = str(tmp_path_factory.mktemp("crash"))
     a = _mk_engine(spark, fixture_web, wd, cfg, False)
     a.run(seeds=fixture_web["seeds"], max_rounds=3)
@@ -234,17 +248,17 @@ def test_resume_refuses_changed_config(spark, fixture_web, tmp_path_factory):
     """Each commit records the CrawlConfig; a resume under a different one
     fails loudly, names the field and runs nothing, while the same config
     (tuple fields included, after the manifest's JSON round-trip) resumes."""
-    cfg = CrawlConfig(honor_robots=False)
+    cfg = CrawlConfig()
     wd = str(tmp_path_factory.mktemp("cfg"))
     a = _mk_engine(spark, fixture_web, wd, cfg, False)
     a.run(seeds=fixture_web["seeds"], max_rounds=1)
 
     b = _mk_engine(spark, fixture_web, wd,
-                   CrawlConfig(honor_robots=False, max_depth=1), False)
+                   CrawlConfig(max_depth=1), False)
     with pytest.raises(ValueError) as err:
         b.run(seeds=None, max_rounds=24)
     assert "max_depth (recorded 3, given 1)" in str(err.value)
-    assert "honor_robots" not in str(err.value)
+    assert "expand_sld" not in str(err.value)
     assert b.io.committed_round() == 0
 
     c = _mk_engine(spark, fixture_web, wd, cfg, False)

@@ -120,7 +120,7 @@ def redirect_web(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def redirect_pair(spark, redirect_web, tmp_path_factory):
-    cfg = CrawlConfig(honor_robots=False, expand_sld=False)
+    cfg = CrawlConfig(expand_sld=False)
     base = redirect_web["base"]
     eng = CrawlEngine(spark, cfg, str(tmp_path_factory.mktemp("rcrawl")),
                       spark.read.parquet(f"{base}/corpus.parquet"),
