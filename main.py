@@ -92,12 +92,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                         "CLI parity; no effect on the offline engine "
                         "[ref: cli/config.go:37]")
     p.add_argument("--queue-size", type=int, default=10_000,
-                   help="reference task-queue size — validated and "
-                        "recorded for CLI parity; without "
+                   help="reference task-queue size — validated for "
+                        "CLI parity; without "
                         "--enforce-queue-cap Spark's scheduler replaces "
                         "the bounded queue (G1 divergence, COVERAGE.md "
                         "2.6) [ref: cli/config.go:23]")
-    p.add_argument("--enforce-queue-cap", action="store_true",
+    p.add_argument("--enforce-queue-cap", dest="cap_queue",
+                   action="store_true",
                    help="G1 deterministic analog: cap each round's next "
                         "frontier at --queue-size rows in (depth, host) "
                         "order, record drops in metrics, refuse a round-0 "
@@ -198,9 +199,7 @@ def main(argv: list[str] | None = None) -> int:
         expand_sld=args.expand_sld,
         custom_prefixes=custom,
         max_response_size=args.max_response_size,
-        user_agent=args.user_agent,
-        queue_size=args.queue_size,
-        enforce_queue_cap=args.enforce_queue_cap,
+        queue_cap=args.queue_size if args.cap_queue else None,
     )
     engine = CrawlEngine(spark, cfg, args.workdir, corpus, dns, robots=robots)
 
@@ -243,7 +242,7 @@ def main(argv: list[str] | None = None) -> int:
             hl = engine.io.read_upto("http_log", last)
             if hl is not None:
                 jsonl.export_http_jsonl(hl, args.http_log, corpus=corpus,
-                                        user_agent=cfg.user_agent)
+                                        user_agent=args.user_agent)
         if args.dns_log:
             dl = engine.io.read_upto("dns_log", last)
             if dl is not None:
@@ -259,7 +258,7 @@ def main(argv: list[str] | None = None) -> int:
     }
     # G1 cap observability: only present when the cap is enabled, so the
     # default summary line stays byte-identical to prior rounds
-    if cfg.enforce_queue_cap:
+    if cfg.queue_cap is not None:
         summary["tasks_dropped"] = sum(s.tasks_dropped for s in stats)
     print(json.dumps(summary))
     if owns_session:

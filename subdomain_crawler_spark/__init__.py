@@ -10,15 +10,18 @@ snapshot-committed parquet tables:
 * the global URL-seen set is an exact ``left_anti`` join against the
   cumulative seen table (the reference's bloom filter,
   pkg/infrastructure/storage/bloom_filter.go, drops ~1% of new hosts);
-* scheduling is a salted-root repartition + per-host politeness window
-  (north-rule addition; the reference uses a FIFO channel,
+* scheduling is synchronized BFS rounds over the frontier table; with a
+  robots table, a per-root politeness budget (a top-K over a salted then
+  an exact per-root window) defers each root's excess rows to the next
+  round (north-rule addition; the reference uses a FIFO channel,
   pkg/infrastructure/storage/queue.go);
 * checkpoint/resume is per-round atomic table snapshots (reference: periodic
   bloom dump, pkg/application/crawl_usecase.go:192-208).
 
 Layout:
     functions/  pure-python vectorized kernels + pandas_udf wrappers
-    operators/  dedup / similarity / seen-set / politeness / first-success
+    operators/  politeness / redirect chains / seen-set bloom bank /
+                connected components / payload validation
     sources/    table IO seam (parquet+manifest snapshots), fixtures, JSONL
     plans/      the rounds-loop crawl engine
     streaming/  watermarked event-time rates (the crawl itself is

@@ -142,32 +142,6 @@ def get_root(domains: pd.Series) -> pd.Series:
     return psl.registered_domain_series(canonicalize(domains))
 
 
-def expand_partition_key_one(seed: str) -> str:
-    """Partitioning key for the fused seed expander (plans/crawl.py).
-
-    Invariant: two seeds that can emit the SAME frontier host must share a
-    key, so the expander's per-partition dedup is globally exact.  For a
-    seed inside a wildcard-rule subtree (``*.X`` ∈ PSL) every emitter of a
-    subtree host is itself in the subtree, so the whole subtree collapses
-    to the one key ``X`` (round-7 fix: the previous ``coalesce(etld1,
-    seed)`` key scattered ``www.kawasaki.jp``-style PSL-error seeds away
-    from the partition in which seed ``kawasaki.jp``'s expansion emits the
-    same host).  Everywhere else the emitters of host ``h`` are exactly
-    ``h`` itself and the SLD ``etld1(h)``, which share ``coalesce(etld1,
-    canon)``."""
-    canon = canonicalize_one(seed)
-    wp = psl.wildcard_subtree_parent_one(canon)
-    if wp is not None:
-        return wp
-    return psl.etld_plus_one_fast(canon) or canon
-
-
-def expand_partition_key(seeds: pd.Series) -> pd.Series:
-    c = canonicalize(seeds)
-    uniq = {h: expand_partition_key_one(h) for h in pd.unique(c.dropna())}
-    return c.map(uniq)
-
-
 def get_depth_one(domain: str) -> int:
     """domain_service.go:80-100.
 

@@ -87,86 +87,6 @@ def wildcard_parents() -> frozenset:
 
 
 @functools.lru_cache(maxsize=1)
-def _wildcard_parent_index() -> tuple[frozenset, int]:
-    """Wildcard parents as reversed-label tuples + the longest parent's
-    label count — the same reversed-label indexing ``_rule_index`` uses,
-    so a subtree lookup is a per-label dict probe instead of a scan over
-    every ``*.X`` rule (the real PSL has hundreds; the per-seed cost must
-    not scale with that — tests/test_psl_properties.py pins it on a
-    synthetic 500-wildcard-rule snapshot)."""
-    parents = frozenset(tuple(reversed(wp.split(".")))
-                        for wp in wildcard_parents())
-    return parents, max((len(p) for p in parents), default=0)
-
-
-def wildcard_subtree_parent_one(domain: str) -> str | None:
-    """The OUTERMOST wildcard-rule parent X (``*.X`` ∈ PSL, shortest
-    match) whose subtree contains ``domain`` (domain == X or domain ends
-    with ".X"), else None — deterministic by construction, never
-    iteration-order-dependent, so the expander's partition key is
-    identical on every Python worker regardless of PYTHONHASHSEED.
-
-    Used by the fused seed expander's partitioning key: inside such a
-    subtree the ``coalesce(etld1, host)`` key does NOT colocate all
-    emitters of a host (seed ``www.X`` keys to itself while seed ``X``'s
-    expansion also emits ``www.X``; an excepted child ``!city.X`` keys to
-    itself likewise), so the whole subtree must collapse to one key.
-    Outermost-match makes that exact even under NESTED wildcard rules
-    (the real PSL has e.g. *.futurecms.at and *.ex.futurecms.at; round-8
-    used longest-match, which split the emitters of a host equal to an
-    INNER parent: seed ``ex.futurecms.at`` keyed to the inner parent
-    while seed ``futurecms.at`` — emitting the same host via a
-    single-label prefix — keyed to the outer one).  Proof sketch:
-    expansion prefixes are SINGLE labels (CommonSubdomains, core.py), so
-    the emitters of a host h are h itself and parent(h) := h minus its
-    leftmost label (the latter only when parent(h) is an SLD).  If any
-    wildcard parent contains parent(h) it also contains h, and every
-    wildcard parent containing h but NOT parent(h) must EQUAL h and lie
-    inside the former's subtree — so outermost(h) == outermost(parent(h))
-    whenever both are in some subtree, i.e. every inner boundary is
-    colocated.  The single residual case is h == X with parent(X) outside
-    ALL subtrees: there parent(X) keys to itself (it is an SLD) while X
-    keys to X.  That emitter pair only exists when X's leading label is
-    an expansion prefix — ``prefix_collision_parents`` detects it and the
-    crawl engine refuses the configuration at start (no vendored rule
-    triggers it; real-PSL wildcard leading labels are city/provider
-    names, not CommonSubdomains entries).
-    Wildcard rules are rare in the PSL (a handful of JP-prefecture
-    blocks, *.ck, a few hosting providers), so the one-key-per-subtree
-    skew is bounded by the seed list's density under those specific
-    parents."""
-    parents, max_len = _wildcard_parent_index()
-    if not max_len:
-        return None
-    rev = tuple(reversed(domain.split(".")))
-    for n in range(1, min(len(rev), max_len) + 1):  # shortest first
-        if rev[:n] in parents:
-            return ".".join(reversed(rev[:n]))
-    return None
-
-
-def prefix_collision_parents(prefixes) -> list[str]:
-    """Wildcard parents X whose emitter-colocation invariant the expander
-    CANNOT key away (see ``wildcard_subtree_parent_one``): parent(X) is an
-    SLD outside every wildcard subtree AND X's leading label is an
-    expansion prefix — then seed parent(X) emits the host X from the
-    partition keyed parent(X) while seed X keys to X.  The crawl engine
-    asserts this returns [] for its merged prefix list at start; sorted
-    for a deterministic error message."""
-    pref = set(prefixes)
-    out = []
-    for wp in wildcard_parents():
-        head, _, rest = wp.partition(".")
-        if not rest or head not in pref:
-            continue
-        if wildcard_subtree_parent_one(rest) is not None:
-            continue  # parent inside a subtree — outermost keying colocates
-        if etld_plus_one(rest) == rest:  # parent is an SLD → it expands
-            out.append(wp)
-    return sorted(out)
-
-
-@functools.lru_cache(maxsize=1)
 def _rule_index() -> tuple[dict[tuple[str, ...], bool], int]:
     """Map reversed-label tuples → is_exception; plus max rule length."""
     idx: dict[tuple[str, ...], bool] = {}

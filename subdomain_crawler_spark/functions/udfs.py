@@ -26,14 +26,6 @@ def udf_get_depth(s: pd.Series) -> pd.Series:
     return core.get_depth(s).astype("int32")
 
 
-@F.pandas_udf(StringType())
-def udf_expand_key(s: pd.Series) -> pd.Series:
-    """Seed-expander partitioning key (core.expand_partition_key):
-    wildcard-parent subtrees collapse to one key; else coalesce(etld1,
-    canon). See plans/crawl._make_seed_expander's dedup invariant."""
-    return core.expand_partition_key(s)
-
-
 @F.pandas_udf(ArrayType(StringType()))
 def udf_extract_hosts(texts: pd.Series) -> pd.Series:
     return core.extract_hosts(texts)

@@ -19,8 +19,8 @@ the rule only injects filters into the fetch-join's joins on ``host``.
 The bloom filter here backs only the sharded bank below, which no engine
 path calls; the bank stays because perfbench's tracer wraps
 ``build_bank_distributed`` by name (see the note above
-``ShardedSeenFilter``). All probe/add paths are numpy-vectorized over
-pandas batches.
+``ShardedSeenFilter``), so nothing probes it: it is only built. The add
+path is numpy-vectorized over pandas batches.
 """
 
 from __future__ import annotations
@@ -92,12 +92,6 @@ class BloomFilter:
         pos = self._positions(hashes).ravel()
         np.bitwise_or.at(self.bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
 
-    def contains_hashes(self, hashes: np.ndarray) -> np.ndarray:
-        pos = self._positions(hashes)
-        byte = self.bits[(pos >> 3).astype(np.int64)]
-        bit = (byte >> (pos & np.uint64(7)).astype(np.uint8)) & 1
-        return bit.all(axis=1)
-
     def union(self, other: "BloomFilter") -> "BloomFilter":
         assert (self.num_bits, self.num_hashes) == (other.num_bits, other.num_hashes)
         return BloomFilter(self.num_bits, self.num_hashes, self.bits | other.bits)
@@ -144,30 +138,8 @@ class ShardedSeenFilter:
             if len(sel):
                 self.shards[s].add_hashes(sel)
 
-    def maybe_contains(self, values: pd.Series) -> np.ndarray:
-        """True = possibly seen (must verify exactly); False = definitely new."""
-        if not len(values):
-            return np.zeros(0, dtype=bool)
-        hashes = fnv64(values)
-        shard_of = (hashes % np.uint64(self.num_shards)).astype(np.int64)
-        out = np.zeros(len(values), dtype=bool)
-        for s in range(self.num_shards):
-            mask = shard_of == s
-            if mask.any():
-                out[mask] = self.shards[s].contains_hashes(hashes[mask])
-        return out
-
     def to_bytes_list(self) -> list[bytes]:
         return [b.to_bytes() for b in self.shards]
-
-    @classmethod
-    def from_bytes_list(cls, bufs: list[bytes]) -> "ShardedSeenFilter":
-        return cls([BloomFilter.from_bytes(b) for b in bufs])
-
-    def merge(self, other: "ShardedSeenFilter") -> "ShardedSeenFilter":
-        assert self.num_shards == other.num_shards
-        return ShardedSeenFilter(
-            [a.union(b) for a, b in zip(self.shards, other.shards)])
 
 
 def build_bank_distributed(df, column: str, num_shards: int,

@@ -14,11 +14,11 @@ Semantics are the golden ``ReferenceSimulator``'s (same quirk list, same
 canonical ordering); tests/test_crawl_e2e.py proves per-round equivalence.
 
 Scale notes (10^10-URL frontier, 1000 executors):
-* seed expansion (S1+X4+D2) is ONE fused Arrow pass: seeds hash-partition
-  by registered domain (the only key under which duplicate hosts can
-  collide), then each partition expands, derives roots, and dedups locally
-  (_make_seed_expander) — the ~134× expanded set is never shuffled for
-  dedup, and the per-host PSL calls collapse to one per SEED;
+* seed expansion (S1+X4) is ONE fused Arrow pass over seeds spread
+  round-robin (_make_seed_expander), so the per-host PSL calls collapse to
+  one per SEED; the ~134× expanded set takes one shuffle, by host, which
+  round 0's fetch-join needs anyway, and the D2 dedup is a ``distinct``
+  aggregated over that same exchange;
 * the fetch-join broadcasts the frontier only while it is small (driver
   checks a row-count threshold); past that it falls back to a shuffle join
   on ``host`` — with AQE enabled skewed hosts re-split at runtime;
@@ -80,28 +80,14 @@ _SEED_ROWS_PER_TASK = 250_000
 
 
 def _make_seed_expander(prefixes: list[str], expand_sld: bool):
-    """Fused seed-expansion kernel for ``mapInPandas`` (S1+X4+D2 in ONE
-    Arrow pass — round-6 rebuild of the explode + get_root-UDF + groupBy
-    pipeline, whose 20 M-row dedup shuffle was the worst-scaling leg of the
-    crawl, BENCH §3d/§3e).
+    """Fused seed-expansion kernel for ``mapInPandas`` (S1+X4 in ONE Arrow
+    pass): each seed's identity row plus, for an SLD seed, one row per
+    prefix, every row stamped with its root at depth 0.
 
-    Correctness requires the input to be hash-partitioned by
-    ``core.expand_partition_key(seed)``: two emissions of the same host
-    can only come from seeds sharing that key.  Outside wildcard-rule
-    subtrees the key is ``coalesce(get_root(seed), seed)`` — identity seed
-    ``p.s`` and expansion of SLD seed ``s`` both key to ``s``, and
-    PSL-error seeds never expand and key to themselves.  INSIDE a
-    wildcard-parent subtree (``*.X`` ∈ PSL) that key scatters emitters
-    (seed ``www.X`` is a PSL error keying to itself while seed ``X``'s
-    expansion emits the same host from partition ``X``; an excepted child
-    ``!city.X`` keys to itself likewise — round-7 ADVICE fix), so every
-    seed with suffix ``X`` keys to ``X`` — exact because any seed that can
-    emit a subtree host is itself in the subtree.  With the invariant
-    restored, a per-partition dedup is globally exact — the global
-    groupBy-shuffle of the EXPANDED set stays unnecessary.  Duplicate
-    hosts always carry identical (root, depth=0) rows (both emitters
-    derive root via the same etld1-with-fallback), so first-wins
-    drop_duplicates is canonical.
+    The kernel does not dedup. Every row for one host is identical (root
+    is a function of host: both emitters derive it via the same
+    etld1-with-fallback), so ``CrawlEngine.start`` dedups with a
+    whole-row ``distinct`` over the host shuffle it already takes.
 
     The expansion rows' root skips the PSL kernel entirely: for an SLD
     seed ``s`` (etld1(s) == s), etld1(p + "." + s) == s for every prefix
@@ -154,15 +140,12 @@ def _make_seed_expander(prefixes: list[str], expand_sld: bool):
                                        .to_numpy(dtype=object)
                 hosts.append(exp_host)
                 roots.append(exp_root)
-        out = pd.DataFrame({
-            "host": np.concatenate(hosts),
+        host = np.concatenate(hosts)
+        yield pd.DataFrame({
+            "host": host,
             "root": np.concatenate(roots),
+            "depth": np.zeros(len(host), dtype=np.int32),
         })
-        # duplicate hosts carry identical (root, depth=0) — the canonical
-        # min-(root,depth) rule degenerates to plain drop_duplicates
-        out = out.drop_duplicates("host", ignore_index=True)
-        out["depth"] = np.zeros(len(out), dtype=np.int32)
-        yield out
 
     return expand_partition
 
@@ -187,8 +170,8 @@ class RoundStats:
     error_count: int
     unique_subdomains: int
     wall_sec: float
-    # G1 deterministic analog (config.enforce_queue_cap): rows the
-    # queue-size cap dropped from this round's NEXT frontier; 0 when off
+    # G1 deterministic analog (config.queue_cap): rows the queue-size
+    # cap dropped from this round's NEXT frontier; 0 when off
     tasks_dropped: int = 0
 
 
@@ -340,28 +323,10 @@ class CrawlEngine:
                    .select(F.lower("line").alias("seed")))
         prefixes = core.merged_prefixes(list(cfg.custom_prefixes)) \
             if cfg.expand_sld else []
-        # expander-key soundness guard (psl.wildcard_subtree_parent_one's
-        # residual case): a wildcard parent whose leading label is an
-        # expansion prefix AND whose own parent is a free-standing SLD
-        # cannot be colocated by any host-derived key — refuse up front
-        # rather than silently risk cross-partition duplicate hosts.
-        from ..functions import psl as _psl
-        bad = _psl.prefix_collision_parents(prefixes)
-        if bad:
-            raise ValueError(
-                "custom/common expansion prefixes collide with wildcard "
-                f"PSL parents {bad}: seed expansion cannot guarantee "
-                "global dedup for these; drop the colliding prefix(es)")
-        # one tiny shuffle of the SEED list (not the ~134× expanded set):
-        # hash-partition by core.expand_partition_key(seed) — wildcard-
-        # parent subtrees collapse to one key, else coalesce(get_root,
-        # seed) — so every seed that can emit a given host lands in one
-        # partition, then expand + dedup in ONE fused Arrow pass
-        # (_make_seed_expander; the dedup-invariant proof lives in its
-        # docstring). The old shape (JVM explode → per-host get_root UDF →
-        # global groupBy) shuffled the full 10^7-row expansion and was the
-        # crawl's worst-scaling leg. depth hardcoded 0 even for expanded
-        # subdomains (crawl_usecase.go:248); PSL-error root fallback quirk
+        # Seeds spread round-robin, then expand in ONE fused Arrow pass
+        # (_make_seed_expander): one PSL call per seed, not per expanded
+        # host. depth hardcoded 0 even for expanded subdomains
+        # (crawl_usecase.go:248); PSL-error root fallback quirk
         # (crawl_usecase.go:239-242) preserved inside the kernel.
         # width sized by the WORK (_SEED_ROWS_PER_TASK): partitions
         # may exceed cores (tasks queue) — that bounds per-task pandas
@@ -376,20 +341,20 @@ class CrawlEngine:
             # seed count costs; the list path keeps its zero-job formula)
             n_seeds = lines.count()
         width = (n_seeds * fanout) // _SEED_ROWS_PER_TASK + 1
-        key = udfs.udf_expand_key("seed")
         df = (cleaned
-              .repartition(width, key)
+              .repartition(width)
               .mapInPandas(_make_seed_expander(prefixes, cfg.expand_sld),
                            FRONTIER_SCHEMA))
-        # re-hash the DEDUPED frontier by host: round 0's giant-regime
+        # hash the expanded rows by host: round 0's giant-regime
         # fetch-join needs hashpartitioning(host, w) on the frontier side,
         # and the cached f0 carrying it means round 0 runs with ZERO
         # frontier exchanges (the corpus side is prepart-cached on host).
-        # The old groupBy-dedup provided this implicitly; keeping it costs
-        # one plain shuffle of the expanded set but none of the old path's
-        # per-host PSL calls or aggregation machinery.
+        # The same exchange colocates every duplicate host, so the D2
+        # dedup is a whole-row distinct planned as a HashAggregate over
+        # it (no second exchange, no sort). Whole-row is exact: all rows
+        # for one host are identical (see _make_seed_expander).
         w = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        df = df.repartition(w, "host")
+        df = df.repartition(w, "host").distinct()
         # persist BEFORE the checkpoint write: the write materializes the
         # cache and its observation carries the row count, so round 0 starts
         # from the cached frame immediately — no recompute of the expansion
@@ -403,12 +368,11 @@ class CrawlEngine:
         # G1 root-enqueue parity (crawl_usecase.go:253-257): the reference
         # treats a full queue at ROOT enqueue as fatal; the deterministic
         # analog refuses a round-0 frontier the cap would have to cut
-        if (self.cfg.enforce_queue_cap and self.cfg.queue_size > 0
-                and self._n0 > self.cfg.queue_size):
+        cap = self.cfg.queue_cap
+        if cap is not None and self._n0 > cap:
             raise RuntimeError(
                 f"failed to add task: queue is full "
-                f"(round-0 frontier {self._n0} > queue size "
-                f"{self.cfg.queue_size})")
+                f"(round-0 frontier {self._n0} > queue size {cap})")
 
     def resume_round(self) -> int:
         """Next round to run: 0 on a fresh dir, committed+1 after a crash/stop."""
@@ -458,9 +422,12 @@ class CrawlEngine:
         current = json.loads(json.dumps(asdict(self.cfg)))
         if recorded is None or recorded == current:
             return
-        diff = [f"{k} (recorded {recorded.get(k)!r}, given {current.get(k)!r})"
+        # a key on one side only differs even when its value is null
+        show = lambda d, k: repr(d[k]) if k in d else "absent"
+        diff = [f"{k} (recorded {show(recorded, k)}, given {show(current, k)})"
                 for k in sorted(recorded.keys() | current.keys())
-                if recorded.get(k) != current.get(k)]
+                if (k in recorded, recorded.get(k))
+                != (k in current, current.get(k))]
         raise ValueError("resume CrawlConfig differs from the one the "
                          "committed rounds ran under, in fields "
                          + ", ".join(diff))
@@ -769,7 +736,7 @@ class CrawlEngine:
             next_frontier = self._dedup_frontier(
                 next_frontier.unionByName(deferred))
         # G1 deterministic analog (off by default — see config): cap the
-        # next frontier at queue_size rows, keep rule (depth, host)
+        # next frontier at queue_cap rows, keep rule (depth, host)
         # ascending (shallowest first, then lexicographic — a fixed
         # priority replacing the reference's enqueue race).  The pre-cap
         # count rides the SAME write action through a second observe node
@@ -777,13 +744,13 @@ class CrawlEngine:
         # shape: orderBy+limit compiles to TakeOrderedAndProject —
         # per-partition top-K then one bounded merge, never a full sort.
         obs_pre = None
-        if cfg.enforce_queue_cap and cfg.queue_size > 0:
+        if cfg.queue_cap is not None:
             obs_pre = Observation()
             next_frontier = (next_frontier
                              .observe(obs_pre,
                                       F.count(F.lit(1)).alias("n_cand"))
                              .orderBy("depth", "host")
-                             .limit(cfg.queue_size))
+                             .limit(cfg.queue_cap))
         # the frontier write's observation feeds the NEXT round's row count —
         # the old per-round frontier.count() job is gone
         obs_f = Observation()

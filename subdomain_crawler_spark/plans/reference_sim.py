@@ -124,13 +124,17 @@ class ReferenceSimulator:
         self.budgets: dict[str, tuple[list[str], int | None]] | None = None
         if robots is not None:
             self.budgets = {}
+            # accepts the frame as pd.read_parquet returns it: list cells
+            # as numpy arrays, null ints as NaN
+            null = lambda v: pd.api.types.is_scalar(v) and pd.isna(v)
             for r in robots.itertuples():
-                prefixes = list(r.disallow_prefixes or [])
+                prefixes = ([] if null(r.disallow_prefixes)
+                            else list(r.disallow_prefixes))
                 cands = []
-                if r.max_per_round is not None:
+                if not null(r.max_per_round):
                     cands.append(int(r.max_per_round))
                 delay = r.crawl_delay
-                if delay is not None and int(delay) > 0:
+                if not null(delay) and int(delay) > 0:
                     # ≥1: over-long delays still schedule one host/round
                     cands.append(max(1, ROUND_WINDOW_SEC // int(delay)))
                 self.budgets[r.root] = (

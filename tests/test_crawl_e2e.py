@@ -281,8 +281,8 @@ def test_seed_file_path_is_distributed(spark, tmp_path):
 
 
 def test_queue_cap_deterministic_drop(spark, tmp_path):
-    """G1 deterministic analog (round 10): with enforce_queue_cap on, each
-    round's next frontier is capped at queue_size rows in (depth, host)
+    """G1 deterministic analog (round 10): with queue_cap set, each
+    round's next frontier is capped at queue_cap rows in (depth, host)
     order, the drop count lands in RoundStats.tasks_dropped and the
     metrics table, and the kept set is exactly the lexicographic head of
     the uncapped frontier — a fixed priority replacing the reference's
@@ -306,7 +306,7 @@ def test_queue_cap_deterministic_drop(spark, tmp_path):
     cdf = spark.read.parquet(f"{base}/corpus.parquet")
     ddf = spark.read.parquet(f"{base}/dns.parquet")
 
-    cfg = CrawlConfig(expand_sld=False, enforce_queue_cap=True, queue_size=4)
+    cfg = CrawlConfig(expand_sld=False, queue_cap=4)
     eng = CrawlEngine(spark, cfg, str(tmp_path / "capped"), cdf, ddf)
     stats = eng.run(seeds=["hub.com"], max_rounds=4)
     got = sorted(r.host for r in eng.io.read_round("frontier", 1).collect())
@@ -331,7 +331,7 @@ def test_queue_cap_root_enqueue_fatal(spark, fixture_web, tmp_path):
     base = fixture_web["base"]
     corpus = spark.read.parquet(f"{base}/corpus.parquet")
     dns = spark.read.parquet(f"{base}/dns.parquet")
-    cfg = CrawlConfig(expand_sld=False, enforce_queue_cap=True, queue_size=1)
+    cfg = CrawlConfig(expand_sld=False, queue_cap=1)
     eng = CrawlEngine(spark, cfg, str(tmp_path / "fatal"), corpus, dns)
     assert len(fixture_web["seeds"]) > 1
     with pytest.raises(RuntimeError, match="queue is full"):

@@ -25,11 +25,13 @@ def test_library_reads_no_spark_graft_env():
 
 
 def test_every_crawlconfig_field_is_read():
-    """A field no module outside config.py names is a knob with no effect."""
+    """A field no module outside config.py reads as an attribute
+    (``.name``) is a knob with no effect. A bare-word match would let a
+    parameter or local of the same name stand in for a read."""
     text = "\n".join(path.read_text() for path in sorted(PKG.rglob("*.py"))
                      if path != PKG / "config.py")
     unread = [f.name for f in dataclasses.fields(CrawlConfig)
-              if not re.search(rf"\b{f.name}\b", text)]
+              if not re.search(rf"\.{f.name}\b", text)]
     assert not unread, f"CrawlConfig fields read by no library module: {unread}"
 
 

@@ -101,6 +101,36 @@ def test_politeness_robots_join_broadcasts(spark, fixture_web):
     assert "LeftAnti" not in p
 
 
+def test_round0_frontier_dedups_on_the_host_shuffle(spark, fixture_web,
+                                                    tmp_path):
+    """Round 0 takes one Python stage (the fused seed expander) and one
+    shuffle of the expanded rows, by host. The dedup is a codegen
+    HashAggregate over that same exchange: no key UDF spreads the seeds,
+    no SortAggregate sorts on host, and the cached frontier keeps
+    hashpartitioning(host, shuffle partitions) for round 0's fetch-join."""
+    from subdomain_crawler_spark.config import CrawlConfig
+    from subdomain_crawler_spark.plans.crawl import CrawlEngine
+
+    base = fixture_web["base"]
+    eng = CrawlEngine(spark, CrawlConfig(), str(tmp_path / "c"),
+                      spark.read.parquet(f"{base}/corpus.parquet"),
+                      spark.read.parquet(f"{base}/dns.parquet"))
+    eng.start(fixture_web["seeds"])
+    f0 = eng._frontier0
+    p = f0._jdf.queryExecution().executedPlan().toString()
+    # the adaptive plan prints the final and the initial plan: check the
+    # one that ran
+    final = p.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
+    assert "ArrowEvalPython" not in final, final
+    assert final.count("MapInPandas") == 1, final
+    assert final.count("Exchange hashpartitioning(host") == 1, final
+    assert (final.index("Exchange hashpartitioning(host")
+            < final.index("MapInPandas")), final  # above the expander
+    assert "HashAggregate" in final and "SortAggregate" not in final, final
+    assert f0.rdd.getNumPartitions() == int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def test_crawl_fetch_join_broadcasts_frontier(spark, fixture_web, tmp_path):
     """The small-round join chain must keep every join broadcast — the
     corpus/dns tables stream through broadcast-inner extracts and the
@@ -136,50 +166,6 @@ def test_crawl_fetch_join_broadcasts_frontier(spark, fixture_web, tmp_path):
     assert "BroadcastHashJoin" not in p_big
 
 
-def test_sessionize_salted_parity(spark):
-    """The salted two-phase sessionize (operators/sessions.py — hot-user
-    scale form) must equal the single-window shape ROW FOR ROW on skewed
-    data, across bucket sizes both larger and smaller than the gap
-    (bucket < gap exercises the sparse-bucket boundary merge through the
-    previous NON-EMPTY bucket)."""
-    import datetime as dt
-
-    import pandas as pd
-    from subdomain_crawler_spark.operators import sessions
-
-    rows = []
-    t0 = dt.datetime(2024, 1, 1)
-    eid = 0
-    # hot user 1: 3 days of events — dense 5-min runs with occasional
-    # >30-min breaks, plus exact-boundary gaps (== gap, and gap+1us)
-    t = t0
-    for i in range(400):
-        step = (dt.timedelta(minutes=5) if i % 7 else
-                dt.timedelta(minutes=31))
-        if i == 100:
-            step = dt.timedelta(seconds=1800)                  # == gap: same session
-        if i == 200:
-            step = dt.timedelta(seconds=1800, microseconds=1)  # > gap: new session
-        t = t + step
-        rows.append((1, eid, t)); eid += 1
-    # normal users: few events each, some spanning midnight boundaries
-    for u in range(2, 12):
-        for k in range(5):
-            rows.append((u, eid, t0 + dt.timedelta(hours=23, minutes=50 + u)
-                         + dt.timedelta(minutes=20 * k))); eid += 1
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["user_id", "event_id", "ts"]))
-
-    want = sorted(map(tuple, sessions.sessionize_simple(df).collect()))
-    for bucket_us in (86_400_000_000,      # 1 day  (bucket >> gap)
-                      3_600_000_000,       # 1 hour (bucket 2x gap)
-                      900_000_000):        # 15 min (bucket < gap!)
-        got = sorted(map(tuple,
-                         sessions.sessionize_salted(
-                             df, bucket_us=bucket_us).collect()))
-        assert got == want, f"bucket_us={bucket_us}"
-
-
 def test_a2_rates_partial_aggregate(spark):
     """A2 rates is a tumbling-window groupBy: two HashAggregates around one
     exchange (map-side combine — per-bucket partials collapse before the
@@ -189,24 +175,6 @@ def test_a2_rates_partial_aggregate(spark):
     assert p.count("HashAggregate") >= 2
     assert p.count("Exchange") <= 2
     assert "Window" not in p  # tumbling window = project + group, no W-node
-
-
-def test_sessionize_salted_phase2_is_aggregated(spark):
-    """The salted sessionize's cross-bucket reconciliation window must read
-    the per-(user, bucket) AGGREGATE, not the event stream: the plan has a
-    partial-aggregated groupBy feeding the phase-2 Window, and the heavy
-    phase-1 Window partitions by (user_id, bkt) — never by user_id alone."""
-    from subdomain_crawler_spark.operators import sessions
-
-    e = spark.read.parquet(f"{SF}/events.parquet") \
-        .select("user_id", "event_id", "ts")
-    p = plan(sessions.sessionize_salted(e))
-    assert "partial_min" in p or "partial_max" in p  # phase-2 input is an agg
-    # phase-1 window keys: user_id AND bkt (hot-user shard key present)
-    import re
-    wspecs = re.findall(r"windowspecdefinition\(([^)]*)\)", p)
-    assert wspecs, p
-    assert any("bkt" in w and "user_id" in w for w in wspecs)
 
 
 def test_round_table_codec_default_zstd(spark, tmp_path):

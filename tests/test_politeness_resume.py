@@ -168,6 +168,36 @@ def test_robots_table_missing_a_column_is_refused(spark, fixture_web,
     assert not (wd / "_manifest.json").exists()
 
 
+def test_simulator_reads_robots_back_from_parquet(fixture_web, tmp_path):
+    """``pd.read_parquet`` returns list cells as numpy arrays and null ints
+    as NaN. The simulator over the fixture's robots.parquet, read back,
+    must equal the simulator over the in-memory frame, and a row whose
+    limits are both null (NaN after the round trip) is unlimited."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = fixture_web["tables"]
+    cfg = CrawlConfig()
+    seeds = fixture_web["seeds"]
+    mem = ReferenceSimulator(t["corpus"], t["dns"], cfg, robots=t["robots"])
+    back = pd.read_parquet(f"{fixture_web['base']}/robots.parquet")
+    disk = ReferenceSimulator(t["corpus"], t["dns"], cfg, robots=back)
+    assert disk.budgets == mem.budgets
+    a, b = mem.run(seeds, max_rounds=24), disk.run(seeds, max_rounds=24)
+    assert a.frontiers == b.frontiers and a.seen == b.seen
+
+    path = str(tmp_path / "robots_nulls.parquet")
+    pq.write_table(pa.table({
+        "root": ["open.com"],
+        "disallow_prefixes": pa.array([None], pa.list_(pa.string())),
+        "crawl_delay": pa.array([None], pa.int32()),
+        "max_per_round": pa.array([None], pa.int32()),
+    }), path)
+    nulls = ReferenceSimulator(t["corpus"], t["dns"], cfg,
+                               robots=pd.read_parquet(path))
+    assert nulls.budgets == {"open.com": ([], None)}
+
+
 def test_crawl_delay_budget(polite_pair, fixture_web):
     """alpha.com: crawl_delay=5 with ROUND_WINDOW_SEC=60 → ≤12 hosts per
     round even though max_per_round is 10^6."""
@@ -263,3 +293,25 @@ def test_resume_refuses_changed_config(spark, fixture_web, tmp_path_factory):
 
     c = _mk_engine(spark, fixture_web, wd, cfg, False)
     assert [st.round for st in c.run(seeds=None, max_rounds=2)] == [1]
+
+
+def test_resume_names_a_field_present_on_one_side_only(spark, fixture_web,
+                                                       tmp_path):
+    """A field present in only one of the recorded and the given config is
+    a config change even when its value is null: the resume check names
+    it. Here the manifest records a since-removed field as null and lacks
+    ``queue_cap``, whose given value is null."""
+    import dataclasses
+
+    cfg = CrawlConfig()
+    eng = _mk_engine(spark, fixture_web, str(tmp_path / "w"), cfg, False)
+    recorded = {k: v for k, v in dataclasses.asdict(cfg).items()
+                if k != "queue_cap"}
+    recorded["default_per_root_budget"] = None
+    eng.io.commit_round(0, {"config": recorded})
+    with pytest.raises(ValueError) as err:
+        eng._check_resume_config()
+    msg = str(err.value)
+    assert "default_per_root_budget (recorded None, given absent)" in msg
+    assert "queue_cap (recorded absent, given None)" in msg
+    assert "max_depth" not in msg

@@ -69,211 +69,115 @@ LINE = st.one_of(
     HOST)
 
 
+def _expand_split(kernel, parts):
+    """The fused kernel over each part, then the whole-row distinct
+    CrawlEngine.start applies after its host shuffle. Returns the kernel's
+    raw rows and the deduped frontier."""
+    outs = [pd.concat(list(kernel(iter([pd.DataFrame(
+                {"seed": pd.Series(p, dtype=object)})]))),
+            ignore_index=True)
+            for p in parts if p]
+    raw = (pd.concat(outs, ignore_index=True) if outs
+           else pd.DataFrame(columns=["host", "root", "depth"]))
+    return raw, raw.drop_duplicates(ignore_index=True)
+
+
+def _reference_frontier(lines, custom):
+    from subdomain_crawler_spark.config import CrawlConfig
+    from subdomain_crawler_spark.plans.reference_sim import expand_seeds
+
+    want: dict[str, tuple[str, int]] = {}
+    for host, root, depth in expand_seeds(
+            lines, CrawlConfig(custom_prefixes=tuple(custom))):
+        want.setdefault(host, (root, depth))
+    return want
+
+
 @settings(max_examples=120, deadline=None)
 @given(st.lists(LINE, min_size=1, max_size=12),
        st.integers(min_value=1, max_value=4),
        st.lists(LABEL, max_size=2))
 def test_fused_expander_matches_reference_sim(lines, width, custom):
-    """Fused-kernel output over an ARBITRARY hash-partitioning by
-    core.expand_partition_key ≡ reference_sim.expand_seeds (S1+X4+D2) —
-    hypothesis over seed shape × custom prefixes × wildcard-parent cases
-    (round-7 stretch ask: the fusion was guarded by example parity only).
-    The partition split exercises the cross-partition dedup invariant the
-    round-7 ADVICE bug broke: duplicate hosts must not survive ACROSS
-    partitions, for ANY assignment that is a function of the key."""
+    """Fused kernel + whole-row distinct, over an ARBITRARY split of the
+    seeds, ≡ reference_sim.expand_seeds (S1+X4+D2) — hypothesis over seed
+    shape × custom prefixes × wildcard-parent cases. The split is a
+    function of the seed alone, not of any colocation key, so emitters of
+    one host may land in different parts: the distinct must still leave
+    exactly one row per host, equal to the reference."""
     import zlib
 
-    from subdomain_crawler_spark.config import CrawlConfig
     from subdomain_crawler_spark.plans.crawl import _make_seed_expander
-    from subdomain_crawler_spark.plans.reference_sim import expand_seeds
 
-    prefixes = core.merged_prefixes(list(custom))
-    kernel = _make_seed_expander(prefixes, True)
-
+    kernel = _make_seed_expander(core.merged_prefixes(list(custom)), True)
     # the engine's pre-kernel cleaning (CrawlEngine.start): trim, drop
     # blanks and #-comments, lowercase
     cleaned = [ln.strip().lower() for ln in lines
                if ln.strip() and not ln.strip().startswith("#")]
     parts: list[list[str]] = [[] for _ in range(width)]
     for s in cleaned:
-        k = core.expand_partition_key_one(s)
-        parts[zlib.crc32(k.encode()) % width].append(s)
-    outs = [
-        pd.concat(
-            list(kernel(iter([pd.DataFrame(
-                {"seed": pd.Series(p, dtype=object)})]))),
-            ignore_index=True)
-        for p in parts if p]
-    got = (pd.concat(outs, ignore_index=True) if outs
-           else pd.DataFrame(columns=["host", "root", "depth"]))
-
-    want: dict[str, tuple[str, int]] = {}
-    for host, root, depth in expand_seeds(
-            lines, CrawlConfig(custom_prefixes=tuple(custom))):
-        want.setdefault(host, (root, depth))
-    assert len(got) == got["host"].nunique(), "cross-partition duplicate"
-    assert {r.host: (r.root, r.depth) for r in got.itertuples()} == want
+        parts[zlib.crc32(s.encode()) % width].append(s)
+    _, got = _expand_split(kernel, parts)
+    assert got["host"].is_unique, "rows sharing a host differ"
+    assert ({r.host: (r.root, r.depth) for r in got.itertuples()}
+            == _reference_frontier(lines, custom))
 
 
 def _clear_psl_caches():
     psl.wildcard_parents.cache_clear()
-    psl._wildcard_parent_index.cache_clear()
     psl._rule_index.cache_clear()
     psl._multi_label_tlds.cache_clear()
 
 
-class _CountingParents(frozenset):
-    """frozenset that counts membership probes — the operation-count
-    proxy for the rule-count-independence claim (round-8 ADVICE: the
-    old t500 < 3*t10 wall-clock form was load-sensitive on a contended
-    box; probe counts are exact and deterministic)."""
-
-    probes = 0
-
-    def __contains__(self, item):
-        _CountingParents.probes += 1
-        return frozenset.__contains__(self, item)
-
-
-def test_wildcard_parent_outermost_match_and_rule_count_independence():
-    """Round-8 ADVICE pair for the expander's partition key:
-
-    1. With NESTED wildcard rules (the real PSL: *.futurecms.at and
-       *.ex.futurecms.at) the returned parent is the OUTERMOST (shortest)
-       match — deterministic regardless of rule declaration order or
-       PYTHONHASHSEED, and it collapses the whole nested family to ONE
-       key (round 8's longest-match split the emitters of a host equal
-       to the inner parent across two keys — see
-       test_nested_wildcard_expander_invariant).
-    2. Per-seed lookup cost does not scale with the wildcard-rule count
-       (the real PSL has hundreds): counted via membership probes, a
-       500-rule snapshot costs EXACTLY the same probes per host as a
-       10-rule one — min(#labels, max rule depth) — where the old form
-       scanned every rule per seed (~50× at 500 rules).
-    """
-    orig = psl.PSL_RULES
-    try:
-        for order in (("*.futurecms.at", "*.ex.futurecms.at"),
-                      ("*.ex.futurecms.at", "*.futurecms.at")):
-            psl.PSL_RULES = ("at",) + order
-            _clear_psl_caches()
-            one = psl.wildcard_subtree_parent_one
-            assert one("x.ex.futurecms.at") == "futurecms.at"
-            assert one("ex.futurecms.at") == "futurecms.at"
-            assert one("deep.y.futurecms.at") == "futurecms.at"
-            assert one("futurecms.at") == "futurecms.at"
-            assert one("other.at") is None
-
-        hosts = [f"h{i}.site{i % 7}.org" for i in range(1_000)]
-
-        def probes(n_rules: int) -> int:
-            psl.PSL_RULES = tuple(f"*.zone{i}.example"
-                                  for i in range(n_rules))
-            _clear_psl_caches()
-            parents, max_len = psl._wildcard_parent_index()
-            counting = _CountingParents(parents)
-            psl._wildcard_parent_index.cache_clear()
-            psl._wildcard_parent_index = lambda: (counting, max_len)
-            try:
-                _CountingParents.probes = 0
-                for h in hosts:
-                    psl.wildcard_subtree_parent_one(h)
-                return _CountingParents.probes
-            finally:
-                psl._wildcard_parent_index = _orig_index
-
-        _orig_index = psl._wildcard_parent_index
-        p10, p500 = probes(10), probes(500)
-        # every synthetic parent has 2 labels, every host has 3 → exactly
-        # min(3, 2) = 2 probes per host at ANY rule count
-        assert p10 == p500 == 2 * len(hosts), (p10, p500)
-    finally:
-        psl.PSL_RULES = orig
-        _clear_psl_caches()
-
-
 def test_nested_wildcard_expander_invariant():
-    """Round-8 ADVICE regression case: with nested wildcard rules and a
-    custom prefix equal to the inner parent's leading label, host
-    ``ex.futurecms.at`` has two emitters — seed ``ex.futurecms.at``
-    itself and seed ``futurecms.at`` (via prefix ``ex``).  Under round
-    8's longest-match key they landed in different partitions (inner vs
-    outer parent); outermost-match keys both to ``futurecms.at``.
-    Brute-force the full emitter-colocation invariant over the nested
-    snapshot, then prove it end-to-end through the fused expander across
-    an adversarial 2-partition split."""
+    """Hosts with emitters on both sides of a wildcard-rule boundary.
+
+    * Nested rules (the real PSL has *.futurecms.at and
+      *.ex.futurecms.at) with custom prefix ``ex``: host
+      ``ex.futurecms.at`` is emitted by seed ``ex.futurecms.at`` itself
+      and by seed ``futurecms.at`` (via prefix ``ex``).
+    * Rule ``*.www-zone.example.com`` with custom prefix ``www-zone``:
+      host ``www-zone.example.com`` is emitted by itself and by the
+      free-standing SLD seed ``example.com``. No host-derived partition
+      key of the seeds colocates this pair; only a dedup after the host
+      shuffle is exact for it.
+
+    The fused kernel runs over adversarial splits (every seed in a part
+    of its own, and several hash splits), then the whole-row distinct:
+    the frontier must have one row per host, equal to the reference."""
     import zlib
 
     orig = psl.PSL_RULES
     try:
-        psl.PSL_RULES = orig + ("*.futurecms.at", "*.ex.futurecms.at")
+        psl.PSL_RULES = orig + ("*.futurecms.at", "*.ex.futurecms.at",
+                                "*.www-zone.example.com")
         _clear_psl_caches()
-        prefixes = core.merged_prefixes(["ex"])
-        assert psl.prefix_collision_parents(prefixes) == []
-
-        k = core.expand_partition_key_one
+        custom = ["ex", "www-zone"]
+        prefixes = core.merged_prefixes(custom)
         seeds = ["futurecms.at", "ex.futurecms.at", "x.ex.futurecms.at",
                  "www.futurecms.at", "deep.y.futurecms.at", "other.at",
-                 "example.com", "www.example.com"]
-        assert k("ex.futurecms.at") == "futurecms.at"
-        assert k("futurecms.at") == "futurecms.at"
-        assert k("x.ex.futurecms.at") == "futurecms.at"
+                 "example.com", "www.example.com", "www-zone.example.com",
+                 "x.www-zone.example.com"]
         emits = {s: set(core.expand_domain_one(s, prefixes)) for s in seeds}
-        assert "ex.futurecms.at" in emits["futurecms.at"]  # the collision
-        for s1 in seeds:
-            for s2 in seeds:
-                if emits[s1] & emits[s2]:
-                    assert k(s1) == k(s2), (s1, s2)
+        assert "ex.futurecms.at" in emits["futurecms.at"]
+        assert "www-zone.example.com" in emits["example.com"]
 
-        # e2e: fused kernel over every 2-partition key-hash split offset
-        # must produce globally unique hosts matching the reference sim
-        from subdomain_crawler_spark.config import CrawlConfig
         from subdomain_crawler_spark.plans.crawl import _make_seed_expander
-        from subdomain_crawler_spark.plans.reference_sim import expand_seeds
 
         kernel = _make_seed_expander(prefixes, True)
-        for salt in range(3):  # vary the key→partition assignment
+        want = _reference_frontier(seeds, custom)
+        splits = [[[s] for s in seeds]]  # every emitter in its own part
+        for salt in range(3):
             parts: list[list[str]] = [[], []]
             for s in seeds:
-                parts[(zlib.crc32(k(s).encode()) + salt) % 2].append(s)
-            outs = [pd.concat(list(kernel(iter([pd.DataFrame(
-                        {"seed": pd.Series(p, dtype=object)})]))),
-                    ignore_index=True) for p in parts if p]
-            got = pd.concat(outs, ignore_index=True)
-            assert len(got) == got["host"].nunique(), \
-                f"cross-partition duplicate at salt={salt}"
-            want = {}
-            for host, root, depth in expand_seeds(
-                    seeds, CrawlConfig(custom_prefixes=("ex",))):
-                want.setdefault(host, (root, depth))
+                parts[(zlib.crc32(s.encode()) + salt) % 2].append(s)
+            splits.append(parts)
+        for i, parts in enumerate(splits):
+            raw, got = _expand_split(kernel, parts)
+            if i == 0:  # the split does put duplicates across parts
+                assert not raw["host"].is_unique
+            assert got["host"].is_unique, f"rows sharing a host differ: {i}"
             assert {r.host: (r.root, r.depth)
-                    for r in got.itertuples()} == want
-    finally:
-        psl.PSL_RULES = orig
-        _clear_psl_caches()
-
-
-def test_prefix_collision_guard():
-    """``prefix_collision_parents`` flags exactly the residual case the
-    outermost key cannot colocate: wildcard parent X with parent(X) a
-    free-standing SLD and leading_label(X) ∈ prefixes.  The vendored
-    snapshot is clean for the merged default list; a synthetic colliding
-    rule trips the crawl engine's start guard."""
-    assert psl.prefix_collision_parents(core.merged_prefixes()) == []
-    orig = psl.PSL_RULES
-    try:
-        # parent example.com is a plain SLD; leading label 'www-zone'
-        # used as a custom prefix → flagged
-        psl.PSL_RULES = orig + ("*.www-zone.example.com",)
-        _clear_psl_caches()
-        assert psl.prefix_collision_parents(["www-zone"]) == \
-            ["www-zone.example.com"]
-        # not flagged without the prefix, or when the parent sits inside
-        # another wildcard subtree (outermost keying colocates it)
-        assert psl.prefix_collision_parents(["www"]) == []
-        psl.PSL_RULES = orig + ("*.example.com", "*.www-zone.example.com")
-        _clear_psl_caches()
-        assert psl.prefix_collision_parents(["www-zone"]) == []
+                    for r in got.itertuples()} == want, i
     finally:
         psl.PSL_RULES = orig
         _clear_psl_caches()
