@@ -16,9 +16,8 @@ canonical ordering); tests/test_crawl_e2e.py proves per-round equivalence.
 Scale notes (10^10-URL frontier, 1000 executors):
 * seed expansion (S1+X4) is ONE fused Arrow pass over seeds spread
   round-robin (_make_seed_expander), so the per-host PSL calls collapse to
-  one per SEED; the ~134× expanded set takes one shuffle, by host, which
-  round 0's fetch-join needs anyway, and the D2 dedup is a ``distinct``
-  aggregated over that same exchange;
+  one per SEED; the ~134× expanded set takes one shuffle, by host, and the
+  D2 dedup is a ``distinct`` aggregated over that exchange;
 * the fetch-join broadcasts the frontier only while it is small (driver
   checks a row-count threshold); past that it falls back to a shuffle join
   on ``host`` — with AQE enabled skewed hosts re-split at runtime;
@@ -33,7 +32,9 @@ Scale notes (10^10-URL frontier, 1000 executors):
   Nothing pre-prunes it: Spark's runtime bloom filter is not injected into
   the anti-join (its plan shows no ``might_contain`` on either side);
 * per-round tables are append-only round=N dirs → lineage is cut at every
-  round boundary (no iterative-union plan explosion), and resume is "read
+  round boundary (no iterative-union plan explosion). The committed
+  ``frontier/round=N`` table is the only hand-off between rounds: every
+  round, round 0 included, reads its frontier from it, so resume is "read
   the last committed round" (M6).
 """
 
@@ -257,10 +258,7 @@ class CrawlEngine:
         # fix: the unconditional repartition was pure overhead whenever the
         # scan already has >= cores splits, and at 100 TB it would shuffle
         # the entire text column for nothing)
-        try:
-            self._text_nparts = self.corpus_text.rdd.getNumPartitions()
-        except Exception:
-            self._text_nparts = 0
+        self._text_nparts = self.corpus_text.rdd.getNumPartitions()
         # Bucketing analog, ONCE per crawl: the big-round regime
         # sort-merges frontier×corpus_meta×dns on host and
         # fetched×corpus_text on content_host, and without preparation
@@ -282,12 +280,10 @@ class CrawlEngine:
             self.corpus_text = (self.corpus_text
                                 .repartition(w, "content_host").persist())
             self.dns = self.dns.repartition(w, "host").persist()
-        self._frontier0: DataFrame | None = None  # cached round-0 frontier
-        self._n0 = 0
 
     # -- lifecycle -----------------------------------------------------------
 
-    def start(self, seeds: list[str] | DataFrame) -> None:
+    def start(self, seeds: list[str] | DataFrame) -> int:
         """Round-0 frontier from seeds — S1 parse + X4 expansion + root stamp
         (assembler.go:106-159 + crawl_usecase.go:237-263), DISTRIBUTED: the
         ~134× prefix fan-out happens as a fused Arrow kernel on executors (a
@@ -302,7 +298,10 @@ class CrawlEngine:
         the file is scanned, cleaned, counted (one distributed job, for
         width sizing) and expanded entirely on executors (round-7: the
         driver list + createDataFrame hop was the last driver-side
-        materialization that grew with input size)."""
+        materialization that grew with input size).
+
+        Writes ``frontier/round=0`` straight from the expansion plan, caching
+        nothing, and returns its row count (observed on that write)."""
         from ..functions import core
 
         cfg = self.cfg
@@ -332,7 +331,7 @@ class CrawlEngine:
         # may exceed cores (tasks queue) — that bounds per-task pandas
         # memory at any seed-list size.  (Spreading small lists across all
         # cores was A/B'd and measured NEUTRAL — the leg's fixed cost is
-        # first-Python-worker startup + the frontier0 write, not kernel
+        # first-Python-worker startup + the round-0 write, not kernel
         # serialization — so the simpler work-sized formula stays.)
         fanout = len(prefixes) + 1
         if n_seeds is None:
@@ -345,34 +344,27 @@ class CrawlEngine:
               .repartition(width)
               .mapInPandas(_make_seed_expander(prefixes, cfg.expand_sld),
                            FRONTIER_SCHEMA))
-        # hash the expanded rows by host: round 0's giant-regime
-        # fetch-join needs hashpartitioning(host, w) on the frontier side,
-        # and the cached f0 carrying it means round 0 runs with ZERO
-        # frontier exchanges (the corpus side is prepart-cached on host).
-        # The same exchange colocates every duplicate host, so the D2
-        # dedup is a whole-row distinct planned as a HashAggregate over
-        # it (no second exchange, no sort). Whole-row is exact: all rows
-        # for one host are identical (see _make_seed_expander).
+        # one shuffle of the expanded rows, by host: it colocates every
+        # duplicate host, so the D2 dedup is a whole-row distinct planned
+        # as a HashAggregate over it (no second exchange, no sort).
+        # Whole-row is exact: all rows for one host are identical (see
+        # _make_seed_expander).
         w = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         df = df.repartition(w, "host").distinct()
-        # persist BEFORE the checkpoint write: the write materializes the
-        # cache and its observation carries the row count, so round 0 starts
-        # from the cached frame immediately — no recompute of the expansion
-        # lineage for the write, no read-back, no count() job.
-        f0 = df.persist()
+        # the write's observation carries the row count: no count() job
         obs = Observation()
         self.io.append("frontier",
-                       f0.observe(obs, F.count(F.lit(1)).alias("n")), 0)
-        self._frontier0 = f0
-        self._n0 = int(obs.get["n"] or 0)
+                       df.observe(obs, F.count(F.lit(1)).alias("n")), 0)
+        n0 = int(obs.get["n"] or 0)
         # G1 root-enqueue parity (crawl_usecase.go:253-257): the reference
         # treats a full queue at ROOT enqueue as fatal; the deterministic
         # analog refuses a round-0 frontier the cap would have to cut
         cap = self.cfg.queue_cap
-        if cap is not None and self._n0 > cap:
+        if cap is not None and n0 > cap:
             raise RuntimeError(
                 f"failed to add task: queue is full "
-                f"(round-0 frontier {self._n0} > queue size {cap})")
+                f"(round-0 frontier {n0} > queue size {cap})")
+        return n0
 
     def resume_round(self) -> int:
         """Next round to run: 0 on a fresh dir, committed+1 after a crash/stop."""
@@ -381,28 +373,24 @@ class CrawlEngine:
     def run(self, seeds: list[str] | DataFrame | None = None,
             max_rounds: int = 64, progress=None) -> list[RoundStats]:
         rnd = self.resume_round()
+        # each round's row count is carried forward from its frontier
+        # write's observation; only a resume counts, once
+        n: int | None = None
         if rnd == 0:
             assert seeds is not None, "fresh run needs seeds"
-            self.start(seeds)
+            n = self.start(seeds)
         else:
             self._check_resume_config()
         stats: list[RoundStats] = []
-        n: int | None = None  # carried forward from the frontier write's
-        # observation — no per-round count() job after round 0
         while rnd < max_rounds:
             if not self.io.exists("frontier", rnd):
                 break
-            if rnd == 0 and self._frontier0 is not None:
-                # fresh start: round 0 runs off the frame the checkpoint
-                # write just materialized into the cache
-                frontier, n = self._frontier0, self._n0
-                self._frontier0 = None
-            else:
-                frontier = self.io.read_round("frontier", rnd).persist()
-            if n is None:  # resume: one-time count
+            # every round reads its committed table; nothing is cached
+            # here, because its one reader (marked or j) is cached itself
+            frontier = self.io.read_round("frontier", rnd)
+            if n is None:
                 n = frontier.count()
             if n == 0:
-                frontier.unpersist()
                 break
             st, n = self._run_round(rnd, frontier, n)
             stats.append(st)
@@ -551,13 +539,9 @@ class CrawlEngine:
                 avail("https").alias("https_avail"),
                 avail("http").alias("http_avail"),
                 https_ok.alias("https_ok"),
-                fetched_https.alias("fetched_https"),
                 http_att.alias("http_att"),
                 http_ok.alias("http_ok"),
-                fetched_http.alias("fetched_http"),
-                (fetched_https | fetched_http).alias("fetched"),
-                F.when(fetched_https, "https").when(fetched_http, "http")
-                 .alias("proto"))
+                (fetched_https | fetched_http).alias("fetched"))
               .persist())
 
         # A1 counters ride on the http_log write as an observation — zero
@@ -573,13 +557,13 @@ class CrawlEngine:
         obs_j = Observation()
         j_observed = j.observe(
             obs_j,
-            F.sum(F.col("active").cast("long")).alias("https_attempts"),
+            # one https attempt and one DNS lookup per active host
+            F.sum(F.col("active").cast("long")).alias("active"),
             F.sum(F.col("http_att").cast("long")).alias("http_attempts"),
             F.sum(F.col("fetched").cast("long")).alias("success"),
             F.sum((F.col("active") & ~F.col("https_ok")).cast("long")).alias("e1"),
             F.sum((F.col("http_att") & ~F.col("http_ok")).cast("long")).alias("e2"),
             F.sum((F.col("active") & ~F.col("fetched")).cast("long")).alias("e3"),
-            F.sum(F.col("active").cast("long")).alias("dns_requests"),
         )
 
         # ---- http log (S3): one row per attempt, failures included ----------
@@ -657,8 +641,7 @@ class CrawlEngine:
 
         # ---- D1: novel = candidates not in cumulative seen -------------------
         seen = self.io.read_upto("seen", rnd - 1)
-        bc = F.broadcast if tasks_processed <= BROADCAST_FRONTIER_MAX \
-            else (lambda df: df)
+        bc = F.broadcast if small_round else (lambda df: df)
         if seen is None:
             # round 0: the seen set is empty, so EVERY candidate is novel —
             # `novel` would be exploded.distinct() and the winner join below
@@ -801,9 +784,9 @@ class CrawlEngine:
             round=rnd,
             tasks_processed=tasks_processed,
             tasks_enqueued=tasks_enqueued,
-            http_requests=int((agg["https_attempts"] or 0)
+            http_requests=int((agg["active"] or 0)
                               + (agg["http_attempts"] or 0)),
-            dns_requests=int(agg["dns_requests"] or 0),
+            dns_requests=int(agg["active"] or 0),
             success_count=int(agg["success"] or 0),
             error_count=int((agg["e1"] or 0) + (agg["e2"] or 0)
                             + (agg["e3"] or 0)),
@@ -815,7 +798,7 @@ class CrawlEngine:
         self.io.append_local("metrics", pd.DataFrame([st.__dict__]), rnd)
         self.io.commit_round(rnd, {"config": asdict(cfg)})
 
-        for df in (frontier, marked, j, pages, winner):
+        for df in (marked, j, pages, winner):
             if df is not None:
                 df.unpersist()
         return st, n_next

@@ -105,9 +105,9 @@ def test_round0_frontier_dedups_on_the_host_shuffle(spark, fixture_web,
                                                     tmp_path):
     """Round 0 takes one Python stage (the fused seed expander) and one
     shuffle of the expanded rows, by host. The dedup is a codegen
-    HashAggregate over that same exchange: no key UDF spreads the seeds,
-    no SortAggregate sorts on host, and the cached frontier keeps
-    hashpartitioning(host, shuffle partitions) for round 0's fetch-join."""
+    HashAggregate over that same exchange: no key UDF spreads the seeds
+    and no SortAggregate sorts on host. Checked on the frame ``start``
+    writes as ``frontier/round=0``."""
     from subdomain_crawler_spark.config import CrawlConfig
     from subdomain_crawler_spark.plans.crawl import CrawlEngine
 
@@ -115,20 +115,24 @@ def test_round0_frontier_dedups_on_the_host_shuffle(spark, fixture_web,
     eng = CrawlEngine(spark, CrawlConfig(), str(tmp_path / "c"),
                       spark.read.parquet(f"{base}/corpus.parquet"),
                       spark.read.parquet(f"{base}/dns.parquet"))
+    written = {}
+    append = eng.io.append
+
+    def capture(table, df, rnd):
+        written[table, rnd] = df
+        append(table, df, rnd)
+
+    eng.io.append = capture
     eng.start(fixture_web["seeds"])
-    f0 = eng._frontier0
-    p = f0._jdf.queryExecution().executedPlan().toString()
-    # the adaptive plan prints the final and the initial plan: check the
-    # one that ran
-    final = p.split("== Final Plan ==")[-1].split("== Initial Plan ==")[0]
-    assert "ArrowEvalPython" not in final, final
-    assert final.count("MapInPandas") == 1, final
-    assert final.count("Exchange hashpartitioning(host") == 1, final
-    assert (final.index("Exchange hashpartitioning(host")
-            < final.index("MapInPandas")), final  # above the expander
-    assert "HashAggregate" in final and "SortAggregate" not in final, final
-    assert f0.rdd.getNumPartitions() == int(
-        spark.conf.get("spark.sql.shuffle.partitions"))
+    # the write runs its own copy of this frame, so the frame's plan is the
+    # one AQE starts from
+    p = written["frontier", 0]._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in p, p
+    assert p.count("MapInPandas") == 1, p
+    assert p.count("Exchange hashpartitioning(host") == 1, p
+    assert (p.index("Exchange hashpartitioning(host")
+            < p.index("MapInPandas")), p  # above the expander
+    assert "HashAggregate" in p and "SortAggregate" not in p, p
 
 
 def test_crawl_fetch_join_broadcasts_frontier(spark, fixture_web, tmp_path):
